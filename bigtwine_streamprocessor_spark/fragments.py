@@ -14,6 +14,12 @@ so the fan-in's completion set always fills in local mode. Everything here is
 per-row Column expressions over the NER/NEL arithmetic of services_local.py —
 streaming-safe (no shuffle, no distinct) and identical in batch.
 
+One scan, one projection: the NER -> NEL entity array is computed once per
+tweet, the four ``(stream_type, payload_json)`` structs are built from it in
+one projection and inlined into four rows, so the source is read and parsed
+once (a union of four per-type selects would re-read it, and re-run the NER
+fold, in every leg).
+
 Payloads travel as JSON strings (the Kafka wire shape); the fan-in state
 stores them untouched.
 """
@@ -105,12 +111,17 @@ def status_payload_col() -> Column:
 
 
 def build_fragments(parsed: DataFrame) -> DataFrame:
-    """Parsed tweets -> unioned fragment stream (tag, stream_type, payload_json).
+    """Parsed tweets -> fragment stream (tag, stream_type, payload_json),
+    four rows per tweet.
 
     parsed columns: id, text, lang, user__id, user__name, user__screen_name,
     user__location (the corpus shape after P1).
     """
-    ents = F.transform(_ner_array(), _nel_entity)
+    # the NER fold is a CodegenFallback HOF that Catalyst never shares
+    # between expressions: compute the entity array once, in its own
+    # projection (CollapseProject keeps a non-cheap column referenced twice)
+    with_ents = parsed.withColumn("_ents", F.transform(_ner_array(), _nel_entity))
+    ents = F.col("_ents")
 
     status_payload = status_payload_col()
 
@@ -151,19 +162,18 @@ def build_fragments(parsed: DataFrame) -> DataFrame:
         )
     )
 
-    def frag(stream_type: str, payload: Column) -> DataFrame:
-        return parsed.select(
-            F.col("id").alias("tag"),
-            F.lit(stream_type).alias("stream_type"),
-            payload.alias("payload_json"),
-        )
-
-    return (
-        frag("status", status_payload)
-        .unionByName(frag("linkedTweet", linked_payload))
-        .unionByName(frag("resource", resource_payload))
-        .unionByName(frag("decodedLocation", location_payload))
+    frags = F.array(
+        *[
+            F.struct(F.lit(st).alias("stream_type"), p.alias("payload_json"))
+            for st, p in (
+                ("status", status_payload),
+                ("linkedTweet", linked_payload),
+                ("resource", resource_payload),
+                ("decodedLocation", location_payload),
+            )
+        ]
     )
+    return with_ents.select(F.col("id").alias("tag"), F.inline(frags))
 
 
 def finalize_results(typed: DataFrame) -> DataFrame:

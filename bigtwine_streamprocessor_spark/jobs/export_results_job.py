@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import argparse
 
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,12 +55,14 @@ def run(argv: list[str] | None = None, bucket_factory=None, progress_cb=None) ->
         .json(args.input_path)
         .filter(F.col("analysisId") == args.analysis_id)  # pushdown filter (F9)
     )
-    # pre-count for progress accounting (A4, `ExportResultsJob.java:103-108`)
-    expected = events.select(
-        F.sum(F.greatest(F.size("payload.entities"), F.lit(1)))
-    ).collect()[0][0]
+    # progress accounting (A4, `ExportResultsJob.java:103-108`): the
+    # reference pre-counts in a scan of its own; here the count is observed
+    # during the export's write
+    expected_rows = F.sum(F.greatest(F.size("payload.entities"), F.lit(1)))
+    counted = Observation("expected_rows")
+    observed = events.observe(counted, expected_rows.alias("n"))
 
-    flat = flatten_results(events)
+    flat = flatten_results(observed)
     if args.format == "twitter-neel-challenge":
         rows = export.challenge_rows(flat)
         export.write_single_file(
@@ -73,7 +77,7 @@ def run(argv: list[str] | None = None, bucket_factory=None, progress_cb=None) ->
         rows = export.dataset_rows(flat)
         export.write_single_file(rows, args.output_path, ["id"])
     else:  # json
-        nested = events.select(
+        nested = observed.select(
             F.to_json(
                 F.struct(
                     "analysisId",
@@ -85,6 +89,13 @@ def run(argv: list[str] | None = None, bucket_factory=None, progress_cb=None) ->
             ).alias("value")
         )
         export.write_single_text_file(nested, args.output_path, ["value"])
+    try:
+        expected = counted.get["n"]
+    except Py4JJavaError:
+        # the write's shuffle got no row (no event matched, or no entity
+        # for the challenge rows): AQE swaps such a stage for an empty
+        # relation and drops its observed metrics. Count directly then.
+        expected = events.select(expected_rows).first()[0]
     if bucket_factory is None and args.gridfs_uri:
         bucket_factory = gridfs_sink.make_pymongo_bucket_factory(
             args.gridfs_uri, args.gridfs_db

@@ -23,7 +23,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..fragments import build_fragments, finalize_results
@@ -147,10 +147,14 @@ def run(argv: list[str] | None = None) -> None:
 
     if not streaming:
         final = finalize_results(fanin.fanin_batch(frags))
-        events = _result_events(final, args.analysis_id)
+        # the count rides on the write (above the fan-in shuffle, so it
+        # reads 0 rather than vanishing when the input has no valid tweet)
+        written = Observation("results")
+        events = _result_events(final, args.analysis_id).observe(
+            written, F.count(F.lit(1)).alias("n")
+        )
         events.coalesce(1).write.mode("overwrite").text(args.output_path)
-        n = spark.read.text(args.output_path).count()
-        print(f"job={args.job_id} mode=batch results={n}")
+        print(f"job={args.job_id} mode=batch results={written.get['n']}")
         spark.stop()
         return
 

@@ -385,6 +385,13 @@ def to_tsv_lines(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(F.concat_ws("\t", *cols).alias("line"))
 
 
+def single_sorted(df: DataFrame, order_by: list[str]) -> DataFrame:
+    """All rows in one partition, sorted by ``order_by``: one shuffle and a
+    local sort, where a global ``orderBy`` would first run a range-partition
+    sampling job over the whole plan."""
+    return df.repartition(1).sortWithinPartitions(*order_by)
+
+
 def write_single_file(
     df: DataFrame,
     path: str,
@@ -397,13 +404,14 @@ def write_single_file(
     `ExportResultsJob.java:162-172`).
 
     Scale note: everything up to the final write runs fully parallel; only the
-    terminal file assembly is single-writer, exactly like the reference. For
-    cluster-scale exports prefer ``df.write.csv`` (many parts) and concatenate
-    at the storage layer.
+    terminal sort and file assembly are single-writer, exactly like the
+    reference. The rows reach that writer through one shuffle
+    (``single_sorted``), so no sampling pass re-runs the plan before the
+    write. For cluster-scale exports prefer ``df.write.csv`` (many parts) and
+    concatenate at the storage layer.
     """
     (
-        df.orderBy(*order_by)
-        .coalesce(1)
+        single_sorted(df, order_by)
         .write.mode("overwrite")
         .option("header", str(header).lower())
         .option("sep", sep)
@@ -414,4 +422,4 @@ def write_single_file(
 
 def write_single_text_file(df: DataFrame, path: str, order_by: list[str]) -> None:
     """Single ordered raw-text file (JSON-lines export — no CSV quoting)."""
-    df.orderBy(*order_by).coalesce(1).write.mode("overwrite").text(path)
+    single_sorted(df, order_by).write.mode("overwrite").text(path)

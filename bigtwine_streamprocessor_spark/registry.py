@@ -838,9 +838,12 @@ def pivot_event_types(spark, sf_dir):
 
 def _fanin_flat(spark, sf_dir):
     from . import fragments as frag_mod
+    from .corpus import spread_small_scan
     from .streaming import fanin as fanin_mod
 
-    parsed = pipeline.stages(spark, sf_dir)["parsed"]
+    # the fused fragment build is per-row HOF work up to the fan-in shuffle:
+    # spread the single-row-group scan so it does not run on one core
+    parsed = spread_small_scan(pipeline.stages(spark, sf_dir)["parsed"])
     final = frag_mod.finalize_results(
         fanin_mod.fanin_batch(frag_mod.build_fragments(parsed))
     )

@@ -399,8 +399,8 @@ def start_topology(
     # milliseconds so fractional intervals work ("0.25 seconds" is not a
     # portable interval literal); int seconds format identically as before.
     # r15 NOTE: the interval itself was swept (1.0/0.25/0.1 s co-timed,
-    # scripts/opt_topo_r15.py) and 1 s stays — batches already overrun it,
-    # so shorter intervals only add empty-trigger churn (OPTIMIZATION_r15).
+    # OPTIMIZATION_r15.md) and 1 s stays — batches already overrun it,
+    # so shorter intervals only add empty-trigger churn.
     trig = {"processingTime": f"{int(trigger_s * 1000 + 0.5)} milliseconds"}
 
     # Durable "consumer offsets" for the service stand-ins: a restarted

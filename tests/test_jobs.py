@@ -7,6 +7,8 @@ import sys
 
 import pytest
 
+from bigtwine_streamprocessor_spark.operators.export import EXTENDED_COLUMNS
+
 REPO = "/root/repo"
 
 
@@ -53,6 +55,9 @@ def test_batch_job_and_exports(spark, tmp_path):
         lines += [json.loads(x) for x in open(f) if x.strip()]
     assert len(lines) > 0
     assert all(d["analysisId"] == "a-test" for d in lines)
+    # the printed count is observed during the write: it must equal what
+    # the write produced
+    assert f"results={len(lines)}" in r.stdout.split()
 
     out = str(tmp_path / "exp")
     r = _run(
@@ -124,6 +129,69 @@ print("GRIDFS_RESULT " + json.dumps(dict(
     (csv2,) = glob.glob(f"{out2}/part-*.csv")
     assert got["n_lines"] == len(open(csv2).read().splitlines())
     assert got["final"] == [1.0, True]
+    # TSV rows = sum(greatest(size(entities), 1)): the observed count
+    # matches the data rows under the header
+    assert f"expected_rows={got['n_lines'] - 1}" in r.stdout.split()
+
+
+@pytest.mark.slow
+def test_jobs_on_empty_input_write_one_file(tmp_path):
+    """No valid tweet in, or no event for the analysis id: both jobs still
+    exit 0 and write exactly one part file (header only for TSV), and print
+    the empty count (a sum over no rows is null, hence `None`). The export's
+    write then shuffles no row, which drops the metrics observed below the
+    shuffle; a challenge export of entity-less tweets does the same, yet
+    must still count each tweet as one expected row."""
+    ds = tmp_path / "dataset"
+    ds.mkdir()
+    # ids that do not cast to a positive long: the parse drops every row
+    (ds / "bad.tsv").write_text(
+        "id\ttext\tuser__id\tuser__name\tuser__screen_name\tuser__location\n"
+        "abc\tspark joins\tu1\tn\ts\tcity_3\n"
+        "-5\tstream query\tu2\tn\ts\t\n"
+    )
+    events = tmp_path / "events"
+    events.mkdir()
+    (events / "other.json").write_text(
+        json.dumps({
+            "analysisId": "a-other", "processDate": "2026-01-01T00:00:00Z",
+            "payload": {"status": {"id": "1", "text": "spark"}, "entities": []},
+        }) + "\n"
+    )
+    results, tsv, challenge = (
+        str(tmp_path / d) for d in ("results", "tsv", "challenge")
+    )
+    # the three CLI runs share one interpreter (each job stops its session)
+    code = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from bigtwine_streamprocessor_spark.jobs import export_results_job as e
+from bigtwine_streamprocessor_spark.jobs import twitter_stream_job as t
+t.run(["--job-id", "t0", "--analysis-id", "a-none", "--dataset-path", {str(ds)!r},
+       "--output-path", {results!r}, "--mode", "batch"])
+e.run(["--job-id", "e0", "--analysis-id", "a-unknown", "--input-path",
+       {str(events)!r}, "--output-path", {tsv!r}, "--format", "tsv"])
+e.run(["--job-id", "e1", "--analysis-id", "a-other", "--input-path",
+       {str(events)!r}, "--output-path", {challenge!r},
+       "--format", "twitter-neel-challenge"])
+"""
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=REPO, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    printed = [ln for ln in r.stdout.splitlines() if ln.startswith("job=")]
+    assert printed == [
+        "job=t0 mode=batch results=0",
+        "job=e0 format=tsv expected_rows=None",
+        "job=e1 format=twitter-neel-challenge expected_rows=1",
+    ]
+    (part,) = glob.glob(f"{results}/part-*")
+    assert open(part).read() == ""
+    (part,) = glob.glob(f"{tsv}/part-*")
+    assert open(part).read().splitlines() == ["\t".join(EXTENDED_COLUMNS)]
+    (part,) = glob.glob(f"{challenge}/part-*")
+    assert open(part).read() == ""
 
 
 def test_input_selector_validation():

@@ -123,6 +123,38 @@ def test_parse_filter_pushdown(spark, sf_dir):
     assert "PushedFilters: []" not in plan
 
 
+def test_build_fragments_scans_source_once(spark, sf_dir):
+    """The four fragments of a tweet come from one projection over one scan:
+    a four-leg union would re-read and re-parse the source in every leg."""
+    from bigtwine_streamprocessor_spark import corpus, fragments
+    from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
+
+    frags = fragments.build_fragments(
+        parse_tweets(corpus.tweets_df(spark, sf_dir), skip_retweets=True)
+    )
+    plan = frags._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, "source read more than once"
+    assert "Union" not in plan
+
+
+def test_single_file_sort_has_no_sampling_pass(spark, sf_dir):
+    """write_single_file's frame reaches its one partition through a single
+    shuffle and sorts there: no RangePartitioning, whose sampling job would
+    re-run the whole upstream plan before the write."""
+    from bigtwine_streamprocessor_spark.operators import export
+
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = (
+        export.single_sorted(df, ["doc_id"])
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "RangePartitioning" not in plan
+    assert "SinglePartition" in plan
+    assert plan.count("Exchange") == 1
+
+
 def test_bloom_filter_broadcasts_and_join_still_hashes(spark, sf_dir):
     """join_bloom_pruned: the bloom bit-set side must BROADCAST (bounded tiny
     frame), and the exact join after pruning stays a hash join on the key."""
