@@ -130,9 +130,9 @@ def bench_topology(
 
     from bigtwine_streamprocessor_spark import corpus
     from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
+    from bigtwine_streamprocessor_spark.sources.streams import replay_feed
     from bigtwine_streamprocessor_spark.streaming import topology
-
-    import pyspark.sql.functions as F
+    from bigtwine_streamprocessor_spark.streaming.transport import TopicCounter
 
     root = tempfile.mkdtemp(prefix="bench-topo-")
     try:
@@ -148,21 +148,7 @@ def bench_topology(
         # trigger spurts — at x40 the fan-in completion bursts still swung
         # sub-window rates 376-910 tweets/s (band_frac 0.91), too wide to
         # detect a real round-over-round regression.
-        # one explode instead of (amplify-1) chained unions: same rows,
-        # constant-depth plan (the union chain made Catalyst analysis itself
-        # a visible setup cost at high amplification)
-        rep = F.explode(F.array(*[F.lit(i) for i in range(amplify)]))
-        parsed = (
-            base.withColumn("_rep", rep)
-            .withColumn(
-                "id",
-                F.when(F.col("_rep") == 0, F.col("id")).otherwise(
-                    F.concat(F.col("id"), F.lit("_r"), F.col("_rep"))
-                ),
-            )
-            .drop("_rep")
-            .cache()
-        )
+        parsed = replay_feed(base, amplify).cache()
         n = parsed.count()
         indir = os.path.join(root, "in")
         # many small files -> a continuous stream of micro-batches rather
@@ -182,47 +168,25 @@ def bench_topology(
         )
 
         t0 = time.perf_counter()
-        queries, sims, topics = topology.start_topology(
+        run = topology.start_topology(
             spark, os.path.join(root, "topics"), stream, "bench",
             timeout_ms=120_000,
         )
-        from bigtwine_streamprocessor_spark.streaming.transport import (
-            TopicCounter,
-        )
-
         # incremental counter: read_all() re-reads every result file per
         # poll (O(files^2) over the run — the sampler itself was burning a
         # core next to the queries it measures by the ~1200-file mark)
-        results_counter = TopicCounter(topics["results"])
+        results_counter = TopicCounter(run.topics["results"])
         samples: list[tuple[float, int]] = []
         got = 0
-        try:
+        # teardown stack-traces into stderr, which is why main() prints the
+        # JSON line strictly LAST
+        with run:
             deadline = time.time() + timeout_s
             while time.time() < deadline and got < n:
                 got = results_counter.count()
                 samples.append((time.perf_counter() - t0, got))
                 time.sleep(0.25)
             elapsed = time.perf_counter() - t0
-        finally:
-            # stop() interrupts any running task and the state-store abort
-            # path then stack-traces into stderr — harmless (the queries are
-            # being torn down) but noisy, which is why main() prints the
-            # JSON line strictly LAST. NOTE: do NOT processAllAvailable()
-            # here to quiesce first — the service simulators keep appending
-            # topic files on every trigger, so downstream queries always see
-            # "more data available" and the drain never returns.
-            spark.sparkContext.setLogLevel("OFF")  # mute teardown traces
-            for q in queries:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            for s in sims:
-                try:
-                    s.stop()
-                except Exception:
-                    pass
-            spark.sparkContext.setLogLevel("WARN")
         parsed.unpersist()
 
         # steady region: first sample at >= 25% completed -> last sample.

@@ -21,7 +21,9 @@ Results are `AnalysisResultProducedEvent` JSON lines
 from __future__ import annotations
 
 import argparse
+import os
 import sys
+import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -166,7 +168,7 @@ def run(argv: list[str] | None = None) -> None:
     if args.transport == "async":
         from ..streaming import topology
 
-        queries, sims, topics = topology.start_topology(
+        topo = topology.start_topology(
             spark,
             args.output_path + "_topics",
             parsed,
@@ -174,22 +176,13 @@ def run(argv: list[str] | None = None) -> None:
             timeout_ms=timeout_s * 1000,
             trigger_s=args.trigger_seconds,
         )
-        try:
+        with topo:
             run_until_idle(
-                queries[0], idle_timeout_s=timeout_s + 2 * args.trigger_seconds
+                topo.queries[0], idle_timeout_s=timeout_s + 2 * args.trigger_seconds
             )
             # let downstream hops drain after the source idles
-            import time as _t
-
-            _t.sleep(timeout_s + 2 * args.trigger_seconds)
-        finally:
-            for q in queries:
-                q.stop()
-            for s in sims:
-                s.stop()
-        lines = topics["results"].read_all()
-        import os
-
+            time.sleep(timeout_s + 2 * args.trigger_seconds)
+        lines = topo.topics["results"].read_all()
         os.makedirs(args.output_path, exist_ok=True)
         with open(os.path.join(args.output_path, "results.json"), "w") as f:
             f.write("\n".join(lines) + ("\n" if lines else ""))

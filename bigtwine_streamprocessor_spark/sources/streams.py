@@ -7,6 +7,8 @@
   client-side term/language/bounding-box filters, semantically equivalent to
   the endpoint's server-side params
   (`FilterableTwitterEndpointInitializer.java:38-54`).
+* **replay_feed** — a parsed corpus copied k times under distinct ids, the
+  feed of the topology drives in ``bench.py`` and ``scripts/``.
 * **kafka_source / kafka_sink_options** — thin wrappers over the Kafka
   connector (`TwitterStreamJob.java:227-229`, topics `Constants.java:15-25`);
   no broker exists in this environment, so they are construct-only.
@@ -107,6 +109,26 @@ def tweet_replay_source(
             bbox_filter(locations, "status.coordinates.lat", "status.coordinates.lng")
         )
     return parsed
+
+
+def replay_feed(parsed: DataFrame, copies: int) -> DataFrame:
+    """Replay amplification: ``copies`` copies of every row under distinct
+    ids (copy 0 keeps ``id``, copy k becomes ``<id>_r<k>``), so a small
+    corpus feeds a drive with as many distinct tweets as it needs. One
+    explode instead of ``copies - 1`` chained unions: same rows, a
+    constant-depth plan (the union chain made Catalyst analysis itself a
+    visible setup cost at high amplification)."""
+    rep = F.explode(F.array(*[F.lit(i) for i in range(copies)]))
+    return (
+        parsed.withColumn("_rep", rep)
+        .withColumn(
+            "id",
+            F.when(F.col("_rep") == 0, F.col("id")).otherwise(
+                F.concat(F.col("id"), F.lit("_r"), F.col("_rep"))
+            ),
+        )
+        .drop("_rep")
+    )
 
 
 def kafka_source(

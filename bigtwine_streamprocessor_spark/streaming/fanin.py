@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from ..schemas import STREAM_TYPES
 
@@ -191,17 +190,6 @@ def fanin_stream(fragments: DataFrame, timeout_ms: int = 15_000) -> DataFrame:
     """Streaming fan-in: fragments (tag, stream_type, payload_json) ->
     assembled rows. 15 s default timeout = the reference's stream mode
     (`Constants.java:30`); pass 30 s for dataset mode (`:33`).
-
-    A ``transformWithState`` twin exists (``fanin_stream_tws``): each
-    fragment slot as its OWN state variable (column family), so an arrival
-    writes only ITS slot plus a ~16-byte mask to the RocksDB changelog
-    instead of rewriting the full accumulated row (the r14 verdict's
-    "status JSON stored redundantly across fragment slots"). It is NOT the
-    default: Spark's transformWithState Python runner needs
-    ``google.protobuf`` at runtime, which this sandbox cannot install
-    (no network) — see OPTIMIZATION_r15.md §3. Its parity tests
-    (tests/test_fanin.py, ``importorskip``-guarded) activate automatically
-    in environments that have protobuf.
     """
     return fragments.groupBy("tag").applyInPandasWithState(
         make_fanin_fn(timeout_ms),
@@ -209,126 +197,6 @@ def fanin_stream(fragments: DataFrame, timeout_ms: int = 15_000) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-# bit per stream type for the tws arrival mask (order = schemas.STREAM_TYPES)
-_TYPE_BIT = {st: 1 << i for i, st in enumerate(sorted(STREAM_TYPES))}
-_FULL_MASK = sum(_TYPE_BIT.values())
-
-
-class _FanInProcessor(StatefulProcessor):
-    """StatefulProcessor for the transformWithState fan-in (see
-    ``fanin_stream``). State layout per key:
-
-    * ``recv``  ValueState (mask int, deadline long) — tiny, rewritten per
-      arrival; the deadline fixes at FIRST element + timeout (one-shot, like
-      the reference's trigger) and also parameterizes ``deleteTimer`` on
-      completion.
-    * ``status``/``loc`` ValueState (payload string) — written when that
-      fragment arrives (status: last write wins, as the row form).
-    * ``ents``/``ress`` ListState (payload string) — duplicates CONCAT via
-      append, without rewriting prior elements.
-
-    The timer is registered ONCE at first element (+timeout); expiry emits a
-    partial iff the status fragment arrived, else purges silently — the
-    exact `TwitterStreamTypeWindowTrigger.java:44-78` semantics the row form
-    implements with remaining-time re-arming."""
-
-    def __init__(self, timeout_ms: int):
-        self.timeout_ms = timeout_ms
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.recv = handle.getValueState(
-            "recv", "mask integer, deadline long"
-        )
-        self.status = handle.getValueState("status", "v string")
-        self.loc = handle.getValueState("loc", "v string")
-        self.ents = handle.getListState("ents", "v string")
-        self.ress = handle.getListState("ress", "v string")
-
-    def _collect(self) -> dict[str, Any]:
-        return {
-            "status_json": self.status.get()[0] if self.status.exists() else None,
-            "entities_json": [r[0] for r in self.ents.get()]
-            if self.ents.exists()
-            else [],
-            "resources_json": [r[0] for r in self.ress.get()]
-            if self.ress.exists()
-            else [],
-            "location_json": self.loc.get()[0] if self.loc.exists() else None,
-        }
-
-    def _purge(self) -> None:
-        for st in (self.recv, self.status, self.loc, self.ents, self.ress):
-            st.clear()
-
-    def handleInputRows(self, key, rows, timerValues):
-        tag = key[0]
-        if self.recv.exists():
-            mask, deadline = self.recv.get()
-        else:
-            # one-shot timer: deadline fixes at FIRST element + timeout
-            mask = 0
-            deadline = (
-                timerValues.getCurrentProcessingTimeInMs() + self.timeout_ms
-            )
-            self.handle.registerTimer(deadline)
-        new_ents: list[tuple] = []
-        new_ress: list[tuple] = []
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                st, pj = row.stream_type, row.payload_json
-                mask |= _TYPE_BIT.get(st, 0)
-                if st == "status":
-                    self.status.update((pj,))  # last write wins
-                elif st == "linkedTweet":
-                    ents = json.loads(pj) if pj else []
-                    new_ents.extend((json.dumps(e),) for e in ents)
-                elif st == "resource":
-                    res = json.loads(pj) if pj else []
-                    new_ress.extend((json.dumps(r),) for r in res)
-                elif st == "decodedLocation":
-                    self.loc.update((pj,))
-        if new_ents:
-            self.ents.appendList(new_ents)
-        if new_ress:
-            self.ress.appendList(new_ress)
-        if mask == _FULL_MASK:
-            # FIRE_AND_PURGE (`TwitterStreamTypeWindowTrigger.java:60-62`)
-            s = self._collect()
-            self._purge()
-            self.handle.deleteTimer(deadline)
-            yield _emit(tag, s, False)
-        else:
-            self.recv.update((mask, deadline))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # timer path: partial emit iff status arrived, else silent purge
-        # (`TwitterStreamTypeWindowTrigger.java:69-78`)
-        if not self.recv.exists():
-            return
-        s = self._collect()
-        self._purge()
-        if s["status_json"] is not None:
-            yield _emit(key[0], s, True)
-
-    def close(self) -> None:
-        pass
-
-
-def fanin_stream_tws(
-    fragments: DataFrame, timeout_ms: int = 15_000
-) -> DataFrame:
-    """transformWithState form of the fan-in (RocksDB sessions only — the
-    per-variable state store backing is a RocksDB feature). Semantics are
-    identical to the applyInPandasWithState form; see ``fanin_stream``."""
-    return fragments.groupBy("tag").transformWithStateInPandas(
-        statefulProcessor=_FanInProcessor(timeout_ms),
-        outputStructType=ASSEMBLED_OUT,
-        outputMode="append",
-        timeMode="processingTime",
     )
 
 

@@ -34,15 +34,18 @@ proportional CONTENT and stays off the driver. Swapping the
 from __future__ import annotations
 
 import os
+import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..fragments import status_payload_col
 from ..operators.parse import has_user_location
 from .fanin import FRAGMENT_IN, fanin_stream, parse_assembled
-from .transport import FileTopic, ServiceSimulator
+from .transport import FileTopic, ServiceSimulator, TopicCounter
 from .transport import geo_service, nel_service, ner_service, resolver_service
 
 TOPIC_NAMES = [
@@ -195,18 +198,31 @@ def reset_publish_stats() -> dict:
     return snap
 
 
-def _epoch_publish(topic, prefix: str, df: DataFrame, writer) -> None:
-    """Exactly-once epoch publish (r8-advisor fix): per-partition publish
-    NAMES alone cannot survive a restart that repartitions the replayed
-    batch (file-source packing depends on parallelism config — a replayed
-    epoch could skip a p0 with different content, silently losing rows, or
-    add extra pN duplicates). So the unit of commitment is the EPOCH:
-    skip it wholesale if its committed dir exists, otherwise discard any
-    partial staging from a crashed attempt, run the executor-side writes
-    into staging, and atomically promote. Both transports honor the full
-    contract: FileTopic promotes a staged dir with one rename; KafkaTopic
-    stages to a shared spool and produces only from ``commit_epoch``
-    (transactional-producer shape, r9 verdict task 4).
+def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
+    """Exactly-once epoch publish of one batch to one or more topics, in
+    ONE Spark action.
+
+    ``specs`` is a list of ``(topic, prefix, col, key, writer)``: ``col``
+    names a column of ``df`` holding that topic's payload for the row (a
+    string, or an array of strings to flatten; NULLs skip), ``key`` is the
+    row-dict key the topic's writer expects (``"value"`` for line writers,
+    ``"item"`` for envelope writers). The batch is computed and scanned
+    ONCE however many topics it feeds (guide §1.2/§2.6: per-micro-batch
+    fixed cost was 3 jobs + a persist for Q1, now 1 job and no cache churn);
+    each writer sees the same per-partition row order a separate action
+    would have.
+
+    Per-partition publish NAMES alone cannot survive a restart that
+    repartitions the replayed batch (file-source packing depends on
+    parallelism config — a replayed epoch could skip a p0 with different
+    content, silently losing rows, or add extra pN duplicates; r8 advisor).
+    So the unit of commitment is the EPOCH, per topic: skip it wholesale if
+    it is already committed, otherwise discard any partial staging from a
+    crashed attempt, run the executor-side writes into staging, and
+    atomically promote. Both transports honor the full contract: FileTopic
+    promotes a staged dir with one rename; KafkaTopic stages to a shared
+    spool and produces only from ``commit_epoch`` (transactional-producer
+    shape, r9 verdict task 4).
 
     Before committing, the driver cross-checks the staged partition files
     it can SEE against an accumulator of non-empty partitions counted on
@@ -214,66 +230,12 @@ def _epoch_publish(topic, prefix: str, df: DataFrame, writer) -> None:
     executors and driver don't share (node-local tmp on a cluster), the
     counts diverge and we fail loudly instead of committing an empty
     marker that would drop the epoch's rows forever."""
-    if topic.epoch_committed(prefix):
-        with _PUBLISH_STATS_LOCK:
-            PUBLISH_STATS["skipped_committed"] += 1
-        return
-    topic.begin_epoch(prefix)
-    count_staged = getattr(topic, "staged_partition_count", None)
-    if count_staged is None:
-        df.foreachPartition(writer)
-    else:
-        # exactly-once per successful task inside an action, so retries /
-        # speculative twins can't inflate the expectation
-        acc = df.sparkSession.sparkContext.accumulator(0)
-
-        def counted(rows, _writer=writer, _acc=acc):
-            rows = list(rows)
-            if rows:
-                _acc.add(1)
-            _writer(iter(rows))
-
-        df.foreachPartition(counted)
-        visible = count_staged(prefix)
-        if visible != acc.value:
-            raise RuntimeError(
-                f"epoch {prefix} on topic {topic.name!r}: executors staged "
-                f"{acc.value} non-empty partition(s) but the driver sees "
-                f"{visible} — the stage root is not on driver+executor-"
-                "shared storage. Refusing to commit (it would silently "
-                "drop rows); point the transport's stage at shared storage "
-                "(same class as the streaming checkpoint)."
-            )
-    topic.commit_epoch(prefix)
-    # counted only AFTER the commit lands (advisor r13): a publish that
-    # raises (staged-count divergence) must not count as fresh work — its
-    # replay would double-count in exactly the replayed/fresh split these
-    # counters exist to measure
-    with _PUBLISH_STATS_LOCK:
-        PUBLISH_STATS["published"] += 1
-
-
-def _epoch_publish_multi(df: DataFrame, specs: list[tuple]) -> None:
-    """One Spark action publishing one batch to SEVERAL topics at once.
-
-    ``specs`` is a list of ``(topic, prefix, col, key, writer)``: ``col``
-    names a column of ``df`` holding that topic's payload for the row (a
-    string, or an array of strings to flatten; NULLs skip), ``key`` is the
-    row-dict key the topic's writer expects (``"value"`` for line writers,
-    ``"item"`` for envelope writers). Semantics are identical to running
-    ``_epoch_publish`` once per topic — same per-topic epoch skip/stage/
-    count-check/commit, same PUBLISH_STATS accounting, same staged file
-    contents (each writer sees the same per-partition row order the
-    separate action would have) — but the batch is computed and scanned
-    ONCE instead of once per topic (guide §1.2/§2.6: per-micro-batch fixed
-    cost was 3 jobs + a persist for Q1, now 1 job and no cache churn).
-    """
     cols = [spec[2] for spec in specs]
     if len(set(cols)) != len(cols):
         # accumulators are keyed by payload column: two specs sharing one
         # would silently share an accumulator and double-count non-empty
         # partitions, tripping the staged-count check spuriously
-        raise ValueError(f"_epoch_publish_multi: duplicate payload columns {cols}")
+        raise ValueError(f"_epoch_publish: duplicate payload columns {cols}")
     live: list[tuple] = []
     for topic, prefix, col, key, writer in specs:
         if topic.epoch_committed(prefix):
@@ -285,18 +247,14 @@ def _epoch_publish_multi(df: DataFrame, specs: list[tuple]) -> None:
     if not live:
         return
     sc = df.sparkSession.sparkContext
-    checked = [
-        spec for spec in live
-        if getattr(spec[0], "staged_partition_count", None) is not None
-    ]
-    accs = {spec[2]: sc.accumulator(0) for spec in checked}
-    plan = [
-        (col, key, writer, col in accs) for (_t, _p, col, key, writer) in live
-    ]
+    # exactly-once per successful task inside an action, so retries /
+    # speculative twins can't inflate the expectation
+    accs = {col: sc.accumulator(0) for (_t, _p, col, _k, _w) in live}
+    plan = [(col, key, writer) for (_t, _p, col, key, writer) in live]
 
     def write_all(rows, _plan=plan, _accs=accs) -> None:
         rows = list(rows)
-        for col, key, writer, counted in _plan:
+        for col, key, writer in _plan:
             vals: list[dict] = []
             for r in rows:
                 v = r[col]
@@ -306,25 +264,28 @@ def _epoch_publish_multi(df: DataFrame, specs: list[tuple]) -> None:
                     vals.extend({key: x} for x in v if x is not None)
                 else:
                     vals.append({key: v})
-            if vals and counted:
+            if vals:
                 _accs[col].add(1)
             writer(iter(vals))
 
     df.foreachPartition(write_all)
     for topic, prefix, col, _key, _writer in live:
-        if col in accs:
-            visible = topic.staged_partition_count(prefix)
-            if visible != accs[col].value:
-                raise RuntimeError(
-                    f"epoch {prefix} on topic {topic.name!r}: executors "
-                    f"staged {accs[col].value} non-empty partition(s) but "
-                    f"the driver sees {visible} — the stage root is not on "
-                    "driver+executor-shared storage. Refusing to commit "
-                    "(it would silently drop rows); point the transport's "
-                    "stage at shared storage (same class as the streaming "
-                    "checkpoint)."
-                )
+        visible = topic.staged_partition_count(prefix)
+        if visible != accs[col].value:
+            raise RuntimeError(
+                f"epoch {prefix} on topic {topic.name!r}: executors "
+                f"staged {accs[col].value} non-empty partition(s) but "
+                f"the driver sees {visible} — the stage root is not on "
+                "driver+executor-shared storage. Refusing to commit "
+                "(it would silently drop rows); point the transport's "
+                "stage at shared storage (same class as the streaming "
+                "checkpoint)."
+            )
         topic.commit_epoch(prefix)
+        # counted only AFTER the commit lands (advisor r13): a publish that
+        # raises (staged-count divergence) must not count as fresh work —
+        # its replay would double-count in exactly the replayed/fresh split
+        # these counters exist to measure
         with _PUBLISH_STATS_LOCK:
             PUBLISH_STATS["published"] += 1
 
@@ -376,6 +337,85 @@ def bind_stage_roots(topics: dict, root: str) -> None:
                 )
 
 
+_ERROR_LINE_RE = _re.compile(r"^\s*([\w.]+(?:Error|Exception): .*)$", _re.M)
+
+
+def _cause(exc) -> str:
+    """The most specific error line of a (possibly JVM-wrapped) query
+    exception: the Python traceback inside it ends in the real error."""
+    text = str(exc)
+    named = _ERROR_LINE_RE.findall(text)
+    return (named[-1] if named else text.splitlines()[0] if text else repr(exc))[:500]
+
+
+class TopologyRun(NamedTuple):
+    """A started topology: its queries (q1..q6, in order), service
+    simulators and topics. Unpacks as ``(queries, sims, topics)``. Use it as
+    a context manager, or call ``stop()``, to tear everything down."""
+
+    queries: list
+    sims: list
+    topics: dict
+
+    def check(self) -> None:
+        """Raise if a query or a simulator has died, naming it and its
+        cause: a dead hop can never complete another tweet, so a poller
+        must not spin to its deadline on one."""
+        for n, q in enumerate(self.queries, start=1):
+            if not q.isActive:
+                exc = q.exception()
+                why = _cause(exc) if exc else "stopped without an error"
+                raise RuntimeError(f"topology query q{n} died: {why}")
+        for sim in self.sims:
+            if not sim.is_alive():
+                svc = sim.req.name.removesuffix("-requests")
+                raise RuntimeError(
+                    f"service simulator {svc} died: "
+                    f"{sim.error or 'thread ended without an error'}"
+                )
+
+    def wait_results(self, n: int, timeout_s: float) -> int:
+        """Poll the results topic until it holds ``n`` lines or
+        ``timeout_s`` passes, calling ``check()`` on every poll. Returns
+        the line count reached."""
+        counter = TopicCounter(self.topics["results"])
+        deadline = time.time() + timeout_s
+        while True:
+            got = counter.count()
+            if got >= n or time.time() >= deadline:
+                return got
+            self.check()
+            time.sleep(0.5)
+
+    def stop(self) -> None:
+        """Stop every query, then stop and join every simulator. Stopping
+        interrupts running tasks, and the state-store abort path then logs
+        stack traces that mean nothing here, so the log is muted meanwhile.
+        Do NOT processAllAvailable() first to quiesce: the simulators keep
+        appending topic files, so downstream queries always see more data
+        and the drain never returns."""
+        sc = SparkSession.active().sparkContext
+        sc.setLogLevel("OFF")
+        try:
+            for q in self.queries:
+                try:
+                    q.stop()
+                except Exception:  # already died; check() names its cause
+                    pass
+            for s in self.sims:
+                s.stop()
+            for s in self.sims:
+                s.join(timeout=10)
+        finally:
+            sc.setLogLevel("WARN")
+
+    def __enter__(self) -> TopologyRun:
+        return self
+
+    def __exit__(self, *exc_info) -> None:
+        self.stop()
+
+
 def start_topology(
     spark: SparkSession,
     root: str,
@@ -384,9 +424,9 @@ def start_topology(
     timeout_ms: int = 15_000,
     trigger_s: float = 1.0,
     topics: dict | None = None,
-):
-    """Wire and start every query + service simulator. Returns (queries,
-    simulators, topics); caller stops them.
+) -> TopologyRun:
+    """Wire and start every query + service simulator. Returns a
+    ``TopologyRun``; the caller stops it.
 
     ``topics`` defaults to FileTopics under ``root``; pass
     ``kafka_transport.make_kafka_topics(bootstrap, TOPIC_NAMES)`` to run the
@@ -410,25 +450,41 @@ def start_topology(
     offsets_dir = os.path.join(root, "_svc_offsets")
     os.makedirs(offsets_dir, exist_ok=True)
 
-    def _sim(req_name: str, resp_name: str, fn) -> ServiceSimulator:
+    def _sim(svc: str, fn) -> ServiceSimulator:
         return ServiceSimulator(
-            topics[req_name],
-            topics[resp_name],
+            topics[f"{svc}-requests"],
+            topics[f"{svc}-responses"],
             fn,
-            offsets_path=os.path.join(offsets_dir, f"{req_name}.log"),
+            offsets_path=os.path.join(offsets_dir, f"{svc}-requests.log"),
         )
 
     sims = [
-        _sim("ner-requests", "ner-responses", ner_service),
-        _sim("nel-requests", "nel-responses", nel_service),
-        _sim("linkresolver-requests", "linkresolver-responses", resolver_service),
-        _sim("geodecoder-requests", "geodecoder-responses", geo_service),
+        _sim("ner", ner_service),
+        _sim("nel", nel_service),
+        _sim("linkresolver", resolver_service),
+        _sim("geodecoder", geo_service),
     ]
     for s in sims:
         s.start()
 
-    def reply(name: str) -> str:
-        return f"{name}.{analysis_id}"
+    # publish specs for _epoch_publish: ``col`` of the batch -> a topic
+    def lines_to(name: str, pfx: str, col: str = "value") -> tuple:
+        t = topics[name]
+        return (t, pfx, col, "value", t.line_writer(pfx))
+
+    def requests_to(svc: str, pfx: str, col: str, chunk: int | None = None) -> tuple:
+        t = topics[f"{svc}-requests"]
+        reply = f"{svc}-responses.{analysis_id}"
+        return (t, pfx, col, "item", t.envelope_writer(reply, chunk, pfx))
+
+    def start(source: DataFrame, publish) -> StreamingQuery:
+        # each query's checkpoint dir is named after its batch function
+        return (
+            source.writeStream.foreachBatch(publish)
+            .option("checkpointLocation", f"{root}/_chk/{publish.__name__}")
+            .trigger(**trig)
+            .start()
+        )
 
     # ---- Q1: tweet stream -> status frags + ner/geo requests + synth ------
     # All row-proportional shaping stays on executors: fragment lines are
@@ -436,13 +492,6 @@ def start_topology(
     # built per-partition from JSON item rows. The driver touches nothing
     # proportional to the stream (`TwitterStreamJob.java:309-343`).
     has_loc = has_user_location()
-    frag_struct = lambda st, payload: F.to_json(
-        F.struct(
-            F.col("id").alias("tag"),
-            F.lit(st).alias("stream_type"),
-            payload.alias("payload_json"),
-        )
-    )
     # empty-location synth (`TwitterStreamJob.java:339-343`): null payload
     # fields drop out of to_json; from_json restores them as nulls.
     synth_loc_payload = F.to_json(
@@ -454,14 +503,17 @@ def start_topology(
     )
     q1_frag_lines = F.array_compact(
         F.array(
-            frag_struct("status", status_payload_col()),
-            F.when(~has_loc, frag_struct("decodedLocation", synth_loc_payload)),
+            _frag_json(F.col("id"), "status", status_payload_col()),
+            F.when(
+                ~has_loc,
+                _frag_json(F.col("id"), "decodedLocation", synth_loc_payload),
+            ),
         )
     )
 
     # all three Q1 outputs are projections of the same batch: publish them
     # in ONE pass (one Spark job per trigger instead of three + a persist);
-    # each topic keeps its own epoch stage/commit (see _epoch_publish_multi)
+    # each topic keeps its own epoch stage/commit (see _epoch_publish)
     def q1(batch_df: DataFrame, epoch_id: int) -> None:
         pfx = f"q1-e{epoch_id}"
         combined = batch_df.select(
@@ -479,45 +531,14 @@ def start_topology(
                 ),
             ).alias("_geo"),
         )
-        _epoch_publish_multi(
+        _epoch_publish(
             combined,
             [
-                (
-                    topics["fragments"],
-                    pfx,
-                    "_frag",
-                    "value",
-                    topics["fragments"].line_writer(pfx),
-                ),
-                (
-                    topics["ner-requests"],
-                    pfx,
-                    "_ner",
-                    "item",
-                    topics["ner-requests"].envelope_writer(
-                        reply("ner-responses"), fname_prefix=pfx
-                    ),
-                ),
-                (
-                    topics["geodecoder-requests"],
-                    pfx,
-                    "_geo",
-                    "item",
-                    topics["geodecoder-requests"].envelope_writer(
-                        reply("geodecoder-responses"),
-                        chunk=GEO_CHUNK,
-                        fname_prefix=pfx,
-                    ),
-                ),
+                lines_to("fragments", pfx, "_frag"),
+                requests_to("ner", pfx, "_ner"),
+                requests_to("geodecoder", pfx, "_geo", chunk=GEO_CHUNK),
             ],
         )
-
-    q1_query = (
-        parsed.writeStream.foreachBatch(q1)
-        .option("checkpointLocation", f"{root}/_chk/q1")
-        .trigger(**trig)
-        .start()
-    )
 
     # ---- Q2: NER responses -> NEL requests --------------------------------
     # Executor-side end to end: parse envelopes, forward items as the NEL
@@ -525,23 +546,11 @@ def start_topology(
     def q2(batch_df: DataFrame, epoch_id: int) -> None:
         pfx = f"q2-e{epoch_id}"
         _epoch_publish(
-            topics["nel-requests"],
-            pfx,
             _resp_items_df(batch_df, NER_RESP_ITEM).select(
                 F.to_json("it").alias("item")
             ),
-            topics["nel-requests"].envelope_writer(
-                reply("nel-responses"), fname_prefix=pfx
-            ),
+            [requests_to("nel", pfx, "item")],
         )
-
-    q2_query = (
-        topics["ner-responses"].read_stream(spark)
-        .writeStream.foreachBatch(q2)
-        .option("checkpointLocation", f"{root}/_chk/q2")
-        .trigger(**trig)
-        .start()
-    )
 
     # ---- Q3: NEL responses -> linkedTweet frags + resolver reqs + synth ---
     _linked_tokens = F.transform(
@@ -579,35 +588,13 @@ def start_topology(
                 ),
             ).alias("_res"),
         )
-        _epoch_publish_multi(
+        _epoch_publish(
             combined,
             [
-                (
-                    topics["fragments"],
-                    pfx,
-                    "_frag",
-                    "value",
-                    topics["fragments"].line_writer(pfx),
-                ),
-                (
-                    topics["linkresolver-requests"],
-                    pfx,
-                    "_res",
-                    "item",
-                    topics["linkresolver-requests"].envelope_writer(
-                        reply("linkresolver-responses"), fname_prefix=pfx
-                    ),
-                ),
+                lines_to("fragments", pfx, "_frag"),
+                requests_to("linkresolver", pfx, "_res"),
             ],
         )
-
-    q3_query = (
-        topics["nel-responses"].read_stream(spark)
-        .writeStream.foreachBatch(q3)
-        .option("checkpointLocation", f"{root}/_chk/q3")
-        .trigger(**trig)
-        .start()
-    )
 
     # ---- Q4: resolver responses -> resource fragments ---------------------
     def q4(batch_df: DataFrame, epoch_id: int) -> None:
@@ -627,23 +614,13 @@ def start_topology(
         )
         pfx = f"q4-e{epoch_id}"
         _epoch_publish(
-            topics["fragments"],
-            pfx,
             _resp_items_df(batch_df, RESOLVER_RESP_ITEM).select(
                 _frag_json(F.col("it.tag"), "resource", res_payload).alias(
                     "value"
                 )
             ),
-            topics["fragments"].line_writer(pfx),
+            [lines_to("fragments", pfx)],
         )
-
-    q4_query = (
-        topics["linkresolver-responses"].read_stream(spark)
-        .writeStream.foreachBatch(q4)
-        .option("checkpointLocation", f"{root}/_chk/q4")
-        .trigger(**trig)
-        .start()
-    )
 
     # ---- Q5: geo responses -> decodedLocation fragments -------------------
     def q5(batch_df: DataFrame, epoch_id: int) -> None:
@@ -656,23 +633,13 @@ def start_topology(
         )
         pfx = f"q5-e{epoch_id}"
         _epoch_publish(
-            topics["fragments"],
-            pfx,
             _resp_items_df(batch_df, GEO_RESP_ITEM).select(
                 _frag_json(
                     F.col("it.tag"), "decodedLocation", loc_payload
                 ).alias("value")
             ),
-            topics["fragments"].line_writer(pfx),
+            [lines_to("fragments", pfx)],
         )
-
-    q5_query = (
-        topics["geodecoder-responses"].read_stream(spark)
-        .writeStream.foreachBatch(q5)
-        .option("checkpointLocation", f"{root}/_chk/q5")
-        .trigger(**trig)
-        .start()
-    )
 
     # ---- Q6: fragment topic -> stateful fan-in -> results -----------------
     frag_stream = (
@@ -692,22 +659,20 @@ def start_topology(
         # result lines serialize and write on executors — never the driver
         pfx = f"q6-e{epoch_id}"
         _epoch_publish(
-            topics["results"],
-            pfx,
             batch_df.select(
                 F.to_json(
                     F.struct(F.col("payload"), F.col("is_partial"))
                 ).alias("value")
             ),
-            topics["results"].line_writer(pfx),
+            [lines_to("results", pfx)],
         )
 
-    q6_query = (
-        final.writeStream.foreachBatch(q6)
-        .option("checkpointLocation", f"{root}/_chk/q6")
-        .trigger(**trig)
-        .start()
-    )
-
-    queries = [q1_query, q2_query, q3_query, q4_query, q5_query, q6_query]
-    return queries, sims, topics
+    queries = [
+        start(parsed, q1),
+        start(topics["ner-responses"].read_stream(spark), q2),
+        start(topics["nel-responses"].read_stream(spark), q3),
+        start(topics["linkresolver-responses"].read_stream(spark), q4),
+        start(topics["geodecoder-responses"].read_stream(spark), q5),
+        start(final, q6),
+    ]
+    return TopologyRun(queries, sims, topics)

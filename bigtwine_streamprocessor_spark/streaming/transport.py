@@ -370,6 +370,7 @@ class ServiceSimulator(threading.Thread):
                 self._seen = {ln.strip() for ln in f if ln.strip()}
         # NOT named _stop: Thread.join() calls an internal self._stop()
         self._halt = threading.Event()
+        self.error: str | None = None  # set when run() dies on a request file
 
     def stop(self):
         self._halt.set()
@@ -379,36 +380,44 @@ class ServiceSimulator(threading.Thread):
             for fn_ in _visible_json_files(self.req.dir):
                 if fn_ in self._seen:
                     continue
-                # ONE response file per request FILE (r15; was one per
-                # request line): the response name derives from the request
-                # file, so a re-handled file re-lands on the same name and
-                # dedups, and the offset can still safely commit AFTER
-                # producing. The write is atomic (tmp + rename), so a crash
-                # mid-file re-produces the whole file — same exactly-once
-                # guarantee at file granularity, and the downstream topic
-                # accumulates per-FILE not per-LINE files (the geo hop's
-                # getBatch was 15.4 s of a 43 s drive listing/planning
-                # thousands of 1-line response files — topo_batch_probe).
-                tag = fn_[: -len(".json")].replace("/", "_")
-                lines = []
-                with open(os.path.join(self.req.dir, fn_)) as f:
-                    for line in f.read().splitlines():
-                        if not line.strip():
-                            continue
-                        env = json.loads(line)
-                        items = self.fn(env["items"])
-                        lines.append(
-                            json.dumps(
-                                {"requestId": env["requestId"], "items": items}
-                            )
-                        )
-                append_lines_to_dir(self.resp.dir, lines, fname=f"r-{tag}")
+                try:
+                    self._answer(fn_)
+                except Exception as exc:
+                    # the thread still dies (its offset stays uncommitted,
+                    # so a restart retries the file); the error names the
+                    # request file for TopologyRun.check()
+                    self.error = f"request file {fn_}: {type(exc).__name__}: {exc}"
+                    raise
                 self._seen.add(fn_)
                 if self._offsets_path:
                     with open(self._offsets_path, "a") as f:
                         f.write(fn_ + "\n")
                         f.flush()
             time.sleep(self.poll_s)
+
+    def _answer(self, fn_: str) -> None:
+        # ONE response file per request FILE (r15; was one per request
+        # line): the response name derives from the request file, so a
+        # re-handled file re-lands on the same name and dedups, and the
+        # offset can still safely commit AFTER producing. The write is
+        # atomic (tmp + rename), so a crash mid-file re-produces the whole
+        # file — same exactly-once guarantee at file granularity, and the
+        # downstream topic accumulates per-FILE not per-LINE files (the geo
+        # hop's getBatch was 15.4 s of a 43 s drive listing/planning
+        # thousands of 1-line response files; per-hop getBatch times come
+        # from `perfbench/run.py --workload stream_light --trace 1`).
+        tag = fn_[: -len(".json")].replace("/", "_")
+        lines = []
+        with open(os.path.join(self.req.dir, fn_)) as f:
+            for line in f.read().splitlines():
+                if not line.strip():
+                    continue
+                env = json.loads(line)
+                items = self.fn(env["items"])
+                lines.append(
+                    json.dumps({"requestId": env["requestId"], "items": items})
+                )
+        append_lines_to_dir(self.resp.dir, lines, fname=f"r-{tag}")
 
 
 def make_envelope(items: list, out_topic: str, timeout_s: int = 15) -> str:

@@ -63,6 +63,7 @@ def main() -> None:
 
     from bigtwine_streamprocessor_spark import corpus, fragments
     from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
+    from bigtwine_streamprocessor_spark.sources.streams import replay_feed
     from bigtwine_streamprocessor_spark.streaming import fanin
 
     root = tempfile.mkdtemp(prefix="fanin-state-probe-")
@@ -72,17 +73,7 @@ def main() -> None:
         )
         n_base = base.count()
         amplify = max(1, args.keys // n_base)
-        rep = F.explode(F.array(*[F.lit(i) for i in range(amplify)]))
-        parsed = (
-            base.withColumn("_rep", rep)
-            .withColumn(
-                "id",
-                F.when(F.col("_rep") == 0, F.col("id")).otherwise(
-                    F.concat(F.col("id"), F.lit("_r"), F.col("_rep"))
-                ),
-            )
-            .drop("_rep")
-        )
+        parsed = replay_feed(base, amplify)
         # the mid-flight fragment set: status for every key, decodedLocation
         # for every key (synth or geo — payload shape matches the topology's)
         frags = fragments.build_fragments(parsed).filter(

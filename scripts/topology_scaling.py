@@ -68,24 +68,14 @@ def restart_soak(
 
     from bigtwine_streamprocessor_spark import corpus, fragments
     from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
+    from bigtwine_streamprocessor_spark.sources.streams import replay_feed
     from bigtwine_streamprocessor_spark.streaming import fanin, topology
     from bigtwine_streamprocessor_spark.streaming.transport import TopicCounter
 
     root = tempfile.mkdtemp(prefix="soak-")
     try:
         base = parse_tweets(corpus.tweets_df(spark, sf_dir), skip_retweets=True)
-        rep = F.explode(F.array(*[F.lit(i) for i in range(amplify)]))
-        parsed = (
-            base.withColumn("_rep", rep)
-            .withColumn(
-                "id",
-                F.when(F.col("_rep") == 0, F.col("id")).otherwise(
-                    F.concat(F.col("id"), F.lit("_r"), F.col("_rep"))
-                ),
-            )
-            .drop("_rep")
-            .cache()
-        )
+        parsed = replay_feed(base, amplify).cache()
         n = parsed.count()
         indir = os.path.join(root, "in")
         parsed.repartition(n_files).write.json(indir)
@@ -126,14 +116,14 @@ def restart_soak(
 
         # ---- first life: run until the pipeline is warm with a big ------
         # ---- in-flight population, then hard-kill ------------------------
-        queries, sims, topics = topology.start_topology(
+        run = topology.start_topology(
             spark, topics_root, make_stream(), "soak",
             timeout_ms=fanin_timeout_ms,
         )
-        counter = TopicCounter(topics["results"])
+        counter = TopicCounter(run.topics["results"])
         t0 = _time.perf_counter()
         mid = 0
-        try:
+        with run:
             deadline = _time.time() + timeout_s
             last_note = _time.time()
             while _time.time() < deadline:
@@ -145,14 +135,7 @@ def restart_soak(
                 # a dead query can never complete more keys — spinning to
                 # the timeout hides the failure (r14: a stream thread died
                 # mid-life and the loop sat silent for 19 minutes)
-                dead = [q for q in queries if not q.isActive]
-                if dead:
-                    msgs = [str(q.exception())[:400] for q in dead]
-                    raise RuntimeError(
-                        f"life 1: {len(dead)} topology quer"
-                        f"{'y' if len(dead) == 1 else 'ies'} died mid-run: "
-                        + " | ".join(msgs)
-                    )
+                run.check()
                 if _time.time() - last_note >= 30:
                     last_note = _time.time()
                     print(
@@ -161,19 +144,6 @@ def restart_soak(
                         flush=True,
                     )
                 _time.sleep(0.25)
-        finally:
-            spark.sparkContext.setLogLevel("OFF")
-            for q in queries:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            for s in sims:
-                try:
-                    s.stop()
-                except Exception:
-                    pass
-            spark.sparkContext.setLogLevel("WARN")
         kill_at = _time.perf_counter() - t0
         inflight = n - mid
         # state-store footprint AT the kill: the checkpointed state the
@@ -184,28 +154,21 @@ def restart_soak(
         # ---- second life: same root, run to completion -------------------
         life1_stats = topology.reset_publish_stats()
         t1 = _time.perf_counter()
-        queries, sims, topics = topology.start_topology(
+        run = topology.start_topology(
             spark, topics_root, make_stream(), "soak",
             timeout_ms=fanin_timeout_ms,
         )
-        counter2 = TopicCounter(topics["results"])
+        counter2 = TopicCounter(run.topics["results"])
         got = 0
         first_new_result_s = None  # replay-stall: restart -> first NEW result
-        try:
+        with run:
             deadline = _time.time() + timeout_s
             last_note = _time.time()
             while _time.time() < deadline and got < n:
                 got = counter2.count()
                 if first_new_result_s is None and got > mid:
                     first_new_result_s = round(_time.perf_counter() - t1, 1)
-                dead = [q for q in queries if not q.isActive]
-                if dead:
-                    msgs = [str(q.exception())[:400] for q in dead]
-                    raise RuntimeError(
-                        f"life 2: {len(dead)} topology quer"
-                        f"{'y' if len(dead) == 1 else 'ies'} died mid-run: "
-                        + " | ".join(msgs)
-                    )
+                run.check()
                 if _time.time() - last_note >= 30:
                     last_note = _time.time()
                     print(
@@ -214,19 +177,6 @@ def restart_soak(
                         flush=True,
                     )
                 _time.sleep(0.5)
-        finally:
-            spark.sparkContext.setLogLevel("OFF")
-            for q in queries:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            for s in sims:
-                try:
-                    s.stop()
-                except Exception:
-                    pass
-            spark.sparkContext.setLogLevel("WARN")
         recovery_s = _time.perf_counter() - t1
         life2_stats = topology.reset_publish_stats()
         parsed.unpersist()
@@ -238,7 +188,7 @@ def restart_soak(
         partial_count = 0
         seen_tags: set[str] = set()
         matched_tags: set[str] = set()
-        for line in topics["results"].read_all():
+        for line in run.topics["results"].read_all():
             r = json.loads(line)
             n_results += 1
             tag = r["payload"]["status"]["id"]

@@ -605,193 +605,3 @@ def test_fanin_deadline_survives_checkpoint_restart(spark, tmp_path):
         "deadline crossed after recovery must fire the partial"
     )
     assert "21" not in out, "orphan must purge silently after restart too"
-
-
-# ---------------------------------------------------------------------------
-# transformWithState twin (r15): RocksDB sessions route fanin_stream through
-# per-variable state (see fanin.fanin_stream docstring). Same semantics as
-# the row form, pinned on the same fixture, including restart survival of
-# the accumulated fragments AND the one-shot processing-time timer.
-# ---------------------------------------------------------------------------
-
-_ROCKS = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-def _with_rocksdb(spark):
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        old = spark.conf.get(_PROVIDER_KEY, None)
-        spark.conf.set(_PROVIDER_KEY, _ROCKS)
-        try:
-            yield
-        finally:
-            if old:
-                spark.conf.set(_PROVIDER_KEY, old)
-            else:
-                spark.conf.unset(_PROVIDER_KEY)
-
-    return cm()
-
-
-def test_fanin_tws_completion_timeout_and_parity(spark, tmp_path):
-    """The tws path must reproduce the row form's observable behavior on the
-    shared fixture: completion fires on the 4th type, duplicates concat,
-    timeout emits a partial iff status arrived, orphans purge silently, and
-    the emitted rows parse to the batch twin's typed output. (Skipped where
-    google.protobuf is unavailable — Spark's transformWithState Python
-    runner requires it; see fanin.fanin_stream docstring.)"""
-    pytest.importorskip("google.protobuf")
-    with _with_rocksdb(spark):
-        indir = tmp_path / "frags"
-        indir.mkdir()
-        with open(indir / "b1.json", "w") as f:
-            for fr in FRAGMENTS:
-                f.write(json.dumps(fr) + "\n")
-        stream = (
-            spark.readStream.schema(fanin.FRAGMENT_IN)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(indir))
-        )
-        q = (
-            fanin.fanin_stream_tws(stream, timeout_ms=1500)
-            .writeStream.format("memory")
-            .queryName("fanin_tws_out")
-            .outputMode("append")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 30
-            while time.time() < deadline:
-                done = {
-                    r["tag"]
-                    for r in spark.sql(
-                        "SELECT tag FROM fanin_tws_out"
-                    ).collect()
-                }
-                if "1" in done:
-                    break
-                time.sleep(0.5)
-            assert "1" in done, "complete tweet must fire on the 4th type"
-
-            time.sleep(2.0)
-            with open(indir / "b2.json", "w") as f:
-                f.write(
-                    json.dumps(frag("9", "status", _status("9"))) + "\n"
-                )
-            while time.time() < deadline:
-                rows = spark.sql("SELECT * FROM fanin_tws_out").collect()
-                if {"1", "2"} <= {r["tag"] for r in rows}:
-                    break
-                time.sleep(0.5)
-        finally:
-            q.stop()
-
-        rows = {
-            r["tag"]: r
-            for r in spark.sql("SELECT * FROM fanin_tws_out").collect()
-        }
-        assert rows["1"]["is_partial"] is False
-        assert len(rows["1"]["entities_json"]) == 2, "duplicates must concat"
-        assert rows["2"]["is_partial"] is True
-        assert "3" not in rows, "orphans (no status) must purge silently"
-
-        stream_typed = fanin.parse_assembled(
-            spark.createDataFrame(
-                [rows["1"], rows["2"]], schema=fanin.ASSEMBLED_OUT
-            )
-        )
-        batch_typed = fanin.fanin_batch(
-            spark.createDataFrame(
-                [
-                    (f["tag"], f["stream_type"], f["payload_json"])
-                    for f in FRAGMENTS
-                ],
-                schema=fanin.FRAGMENT_IN,
-            )
-        ).filter(F.col("tag").isin("1", "2"))
-        canon = lambda df: sorted(
-            df.select(
-                F.to_json(F.struct(*sorted(df.columns))).alias("j")
-            ).collect()
-        )
-        assert canon(stream_typed) == canon(batch_typed)
-
-
-def test_fanin_tws_state_and_timer_survive_restart(spark, tmp_path):
-    """tws twin of the checkpoint-restart pins: accumulated fragments cross
-    a restart via the per-variable state store, completion after recovery
-    emits exactly once, and the one-shot deadline (registered timer) also
-    survives — an incomplete key whose deadline passes DURING the downtime
-    fires its partial on the restarted query."""
-    pytest.importorskip("google.protobuf")
-    with _with_rocksdb(spark):
-        indir = tmp_path / "frags"
-        indir.mkdir()
-        outdir = tmp_path / "out"
-        chk = tmp_path / "chk"
-
-        def _start_tws():
-            stream = (
-                spark.readStream.schema(fanin.FRAGMENT_IN)
-                .option("maxFilesPerTrigger", 1)
-                .json(str(indir))
-            )
-            return (
-                fanin.fanin_stream_tws(stream, timeout_ms=4_000)
-                .writeStream.format("json")
-                .option("path", str(outdir))
-                .option("checkpointLocation", str(chk))
-                .outputMode("append")
-                .trigger(processingTime="500 milliseconds")
-                .start()
-            )
-
-        # tag 10 incomplete (status + linkedTweet), tag 11 complete,
-        # tag 12 status-only (will time out across the restart)
-        with open(indir / "a.json", "w") as f:
-            for fr in [
-                frag("10", "status", _status("10")),
-                frag("10", "linkedTweet", [ENT]),
-                frag("11", "status", _status("11")),
-                frag("11", "linkedTweet", [ENT]),
-                frag("11", "resource", [RES]),
-                frag("11", "decodedLocation", LOC),
-                frag("12", "status", _status("12")),
-            ]:
-                f.write(json.dumps(fr) + "\n")
-        q = _start_tws()
-        try:
-            _wait_for_tags(spark, outdir, {"11"})
-        finally:
-            q.stop()
-        assert set(_read_out(spark, outdir)) == {"11"}
-
-        time.sleep(4.5)  # tag 12's one-shot deadline passes while down
-        with open(indir / "b.json", "w") as f:
-            for fr in [
-                frag("10", "linkedTweet", [ENT]),
-                frag("10", "resource", [RES]),
-                frag("10", "decodedLocation", LOC),
-            ]:
-                f.write(json.dumps(fr) + "\n")
-        q = _start_tws()
-        try:
-            _wait_for_tags(spark, outdir, {"10", "12"})
-        finally:
-            q.stop()
-        out = _read_out(spark, outdir)
-        assert sorted(out) == ["10", "11", "12"]
-        assert out["10"]["is_partial"] is False
-        assert len(out["10"]["entities_json"]) == 2, (
-            "fragments from both lives must both be present"
-        )
-        assert out["12"]["is_partial"] is True, (
-            "one-shot deadline must survive the restart and fire the partial"
-        )

@@ -488,6 +488,51 @@ def test_curate_resume_invalidates_on_content_change(spark, sf_dir, tmp_path):
     assert q_mtime() > t1, "input content change must invalidate the chain"
 
 
+@pytest.mark.slow
+def test_stream_job_async_transport(tmp_path):
+    """``--mode stream --transport async`` runs the full async topology and
+    tears it down: the job exits 0, ``results=`` counts the lines of
+    results.json, and no tweet gets two results or a result it was not
+    sent."""
+    tweets = tmp_path / "tweets"
+    tweets.mkdir()
+    ids = [str(1000 + i) for i in range(6)]
+    (tweets / "t.json").write_text(
+        "\n".join(
+            json.dumps(
+                {
+                    "id": t,
+                    "text": f"spark join stream news {t}",
+                    "lang": "en",
+                    "user": {
+                        "id": "7",
+                        "screenName": "ann",
+                        "location": "city_3" if i % 2 else None,
+                    },
+                }
+            )
+            for i, t in enumerate(ids)
+        )
+        + "\n"
+    )
+    out = tmp_path / "out"
+    r = _run(
+        "bigtwine_streamprocessor_spark.jobs.twitter_stream_job",
+        "--job-id", "j-async", "--analysis-id", "a-async",
+        "--tweet-json-path", str(tweets), "--output-path", str(out),
+        "--mode", "stream", "--transport", "async",
+        "--processing-timeout", "3", "--trigger-seconds", "1",
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    printed = int(r.stdout.split("results=")[1].split()[0])
+    with open(out / "results.json") as f:
+        results = [json.loads(ln) for ln in f if ln.strip()]
+    assert printed == len(results)
+    got = [res["payload"]["status"]["id"] for res in results]
+    assert len(got) == len(set(got)), "duplicate result for some tweet"
+    assert set(got) <= set(ids)
+
+
 def test_stream_dump_job_golden_file(tmp_path):
     """K5 (`TwitterStreamDump.java:50-70`): replayed tweet-JSON -> parse ->
     (id, newline-stripped text, user id, screen name) -> ONE ordered TSV.

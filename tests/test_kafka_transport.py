@@ -8,6 +8,12 @@ import os
 import pytest
 
 from bigtwine_streamprocessor_spark.streaming import kafka_transport as kt
+from tests.topology_drive import (
+    assert_matches_batch,
+    parsed_batch,
+    wait_results,
+    write_feed,
+)
 
 
 class CountingFactory:
@@ -229,13 +235,9 @@ def test_topology_runs_on_kafka(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path / "in"))
     )
-    queries, sims, topics = topology.start_topology(
+    topology.start_topology(
         spark, str(tmp_path / "chk"), stream, "a-kafka", topics=topics
-    )
-    for q in queries:
-        q.stop()
-    for s in sims:
-        s.stop()
+    ).stop()
 
 
 def _staged_topic(tmp_path, name="t"):
@@ -441,7 +443,7 @@ def test_epoch_publish_cross_checks_driver_visibility(spark, tmp_path):
     df = spark.range(20).repartition(4).selectExpr("concat('v-', id) AS value")
     # healthy path: counts agree, epoch commits, lines produced once
     topology._epoch_publish(
-        topic, "q9-e0", df, topic.line_writer(fname_prefix="q9-e0")
+        df, [(topic, "q9-e0", "value", "value", topic.line_writer("q9-e0"))]
     )
     assert sorted(_spool_lines(spool, "results")) == sorted(
         f"v-{i}" for i in range(20)
@@ -461,7 +463,7 @@ def test_epoch_publish_cross_checks_driver_visibility(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="shared storage"):
         topology._epoch_publish(
-            blind, "q9-e1", df, blind.line_writer(fname_prefix="q9-e1")
+            df, [(blind, "q9-e1", "value", "value", blind.line_writer("q9-e1"))]
         )
     assert blind.epoch_committed("q9-e1") is False, "must not mark committed"
     assert _spool_lines(spool, "results2") == []
@@ -496,75 +498,24 @@ def test_full_topology_over_kafka_producer_path(spark, sf_dir, tmp_path):
     the broker stand-in landing flushes in FileTopic layout for the read
     side. Results must equal the in-process batch golden exactly. This is
     the config-switch parity check the broker-gated test can't run here."""
-    import time
-
-    from bigtwine_streamprocessor_spark import corpus, fragments
-    from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
-    from bigtwine_streamprocessor_spark.streaming import fanin, topology
-
-    import pyspark.sql.functions as F
+    from bigtwine_streamprocessor_spark.streaming import topology
 
     kt._PRODUCER_CACHE.clear()
-    parsed_batch = (
-        parse_tweets(corpus.tweets_df(spark, sf_dir), skip_retweets=True)
-        .orderBy("id")
-        .limit(25)
-        .cache()
-    )
-    n = parsed_batch.count()
-    indir = tmp_path / "tweets_in"
-    indir.mkdir()
-    with open(indir / "batch0.json", "w") as f:
-        for r in parsed_batch.collect():
-            f.write(json.dumps(r.asDict()) + "\n")
-    stream = (
-        spark.readStream.schema(parsed_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(indir))
-    )
+    batch = parsed_batch(spark, sf_dir, 25)
+    n = batch.count()
+    stream = write_feed(spark, batch, tmp_path / "tweets_in")()
     root = str(tmp_path / "run")
     topics = {
         name: kt.SpoolBackedKafkaTopic(os.path.join(root, "spool"), name)
         for name in topology.TOPIC_NAMES
     }
-    queries, sims, topics = topology.start_topology(
+    with topology.start_topology(
         spark, root, stream, "a-kspool", timeout_ms=20_000, topics=topics
-    )
-    try:
-        deadline = time.time() + 120
-        results = []
-        while time.time() < deadline:
-            results = topics["results"].read_all()
-            if len(results) >= n:
-                break
-            time.sleep(1.0)
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
+    ) as run:
+        results = wait_results(run, n, 120)
     # stage roots were bound under the topology root (not /tmp ambient)
     assert topics["results"].stage_root == os.path.join(root, "_kafka_stage")
-    assert len(results) == n
-    got = {
-        json.loads(r)["payload"]["status"]["id"]: json.loads(r)
-        for r in results
-    }
-    assert not any(v["is_partial"] for v in got.values())
-    want_df = fragments.finalize_results(
-        fanin.fanin_batch(fragments.build_fragments(parsed_batch))
-    )
-    want = {
-        r["tag"]: json.loads(r["value"])
-        for r in want_df.select(
-            F.col("tag"), F.to_json(F.struct(F.col("payload"))).alias("value")
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for tag in want:
-        assert json.dumps(got[tag]["payload"], sort_keys=True) == json.dumps(
-            want[tag]["payload"], sort_keys=True
-        ), f"payload mismatch for {tag}"
+    assert_matches_batch(results, batch)
 
 
 @pytest.mark.slow
@@ -579,38 +530,12 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
     advisor-r10 stale-marker scenario exercised through a REAL streaming
     restart rather than unit fakes. Final results must equal the batch
     golden exactly."""
-    import time
-
-    from bigtwine_streamprocessor_spark import corpus, fragments
-    from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
-    from bigtwine_streamprocessor_spark.streaming import fanin, topology
-
-    import pyspark.sql.functions as F
+    from bigtwine_streamprocessor_spark.streaming import topology
 
     kt._PRODUCER_CACHE.clear()
-    parsed_batch = (
-        parse_tweets(corpus.tweets_df(spark, sf_dir), skip_retweets=True)
-        .orderBy("id")
-        .limit(30)
-        .cache()
-    )
-    n = parsed_batch.count()
-    indir = tmp_path / "tweets_in"
-    indir.mkdir()
-    rows = parsed_batch.collect()
-    per_file = max(1, n // 6)
-    for i in range(0, n, per_file):
-        with open(indir / f"batch{i:04d}.json", "w") as f:
-            for r in rows[i : i + per_file]:
-                f.write(json.dumps(r.asDict()) + "\n")
-
-    def make_stream():
-        return (
-            spark.readStream.schema(parsed_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(indir))
-        )
-
+    batch = parsed_batch(spark, sf_dir, 30)
+    n = batch.count()
+    make_stream = write_feed(spark, batch, tmp_path / "tweets_in", files=6)
     root = str(tmp_path / "run")
     spool = os.path.join(root, "spool")
 
@@ -624,71 +549,26 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
         }
 
     # ---- first life: run until SOME results exist, then hard-stop --------
-    queries, sims, topics = topology.start_topology(
+    # generous deadlines: passing runs break out as soon as results land;
+    # the budget only matters when the host is contended (the two r12
+    # in-suite flakes both coincided with a concurrent 15 GB replica
+    # build), and a load-induced timeout must not read as an exactly-once
+    # failure
+    with topology.start_topology(
         spark, root, make_stream(), "a-krs", timeout_ms=60_000,
         topics=make_topics(),
-    )
-    try:
-        # generous deadlines: passing runs break out as soon as results
-        # land; the budget only matters when the host is contended (the
-        # two r12 in-suite flakes both coincided with a concurrent 15 GB
-        # replica build), and a load-induced timeout must not read as an
-        # exactly-once failure
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if len(topics["results"].read_all()) >= 1:
-                break
-            time.sleep(0.5)
-        assert topics["results"].read_all(), "no results before the stop"
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
-    for s in sims:
-        s.join(timeout=10)
-    mid = len(topics["results"].read_all())
+    ) as run:
+        wait_results(run, 1, 180)
+    mid = len(run.topics["results"].read_all())
     assert mid < n, "stop landed after completion; nothing left to recover"
 
     # ---- second life: same root; markers must gate the replay -----------
-    queries, sims, topics = topology.start_topology(
+    with topology.start_topology(
         spark, root, make_stream(), "a-krs", timeout_ms=60_000,
         topics=make_topics(),
-    )
-    try:
-        deadline = time.time() + 300
-        results = []
-        while time.time() < deadline:
-            results = topics["results"].read_all()
-            if len(results) >= n:
-                break
-            time.sleep(1.0)
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
-
-    assert len(results) == n, f"expected {n} results, got {len(results)}"
-    parsed_results = [json.loads(r) for r in results]
-    tags = [r["payload"]["status"]["id"] for r in parsed_results]
-    assert len(set(tags)) == n, "duplicate result for some tweet"
-    assert not any(r["is_partial"] for r in parsed_results)
-    want_df = fragments.finalize_results(
-        fanin.fanin_batch(fragments.build_fragments(parsed_batch))
-    )
-    want = {
-        r["tag"]: json.loads(r["value"])
-        for r in want_df.select(
-            F.col("tag"), F.to_json(F.struct(F.col("payload"))).alias("value")
-        ).collect()
-    }
-    got = {r["payload"]["status"]["id"]: r for r in parsed_results}
-    assert set(got) == set(want)
-    for tag in want:
-        assert json.dumps(got[tag]["payload"], sort_keys=True) == json.dumps(
-            want[tag]["payload"], sort_keys=True
-        ), f"payload mismatch for tweet {tag}"
+    ) as run:
+        results = wait_results(run, n, 300)
+    assert_matches_batch(results, batch)
 
 
 def test_crash_inside_commit_window_replays_one_epoch(tmp_path, monkeypatch):
@@ -986,32 +866,12 @@ def test_full_topology_over_transactional_commits(spark, sf_dir, tmp_path):
     batch golden exactly. This promotes the manual r12 verification drive
     into a standing regression: a deployment that flips
     transactional_factory on gets the identical dataflow."""
-    import time
-
-    from bigtwine_streamprocessor_spark import corpus, fragments
-    from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
-    from bigtwine_streamprocessor_spark.streaming import fanin, topology
-
-    import pyspark.sql.functions as F
+    from bigtwine_streamprocessor_spark.streaming import topology
 
     kt._PRODUCER_CACHE.clear()
-    parsed_batch = (
-        parse_tweets(corpus.tweets_df(spark, sf_dir), skip_retweets=True)
-        .orderBy("id")
-        .limit(25)
-        .cache()
-    )
-    n = parsed_batch.count()
-    indir = tmp_path / "tweets_in"
-    indir.mkdir()
-    with open(indir / "batch0.json", "w") as f:
-        for r in parsed_batch.collect():
-            f.write(json.dumps(r.asDict()) + "\n")
-    stream = (
-        spark.readStream.schema(parsed_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(indir))
-    )
+    batch = parsed_batch(spark, sf_dir, 25)
+    n = batch.count()
+    stream = write_feed(spark, batch, tmp_path / "tweets_in")()
     root = str(tmp_path / "run")
     topics = {
         name: kt.SpoolBackedKafkaTopic(
@@ -1020,28 +880,11 @@ def test_full_topology_over_transactional_commits(spark, sf_dir, tmp_path):
         for name in topology.TOPIC_NAMES
     }
     assert all(t._txn_factory is not None for t in topics.values())
-    queries, sims, topics = topology.start_topology(
+    with topology.start_topology(
         spark, root, stream, "a-txn", timeout_ms=20_000, topics=topics
-    )
-    try:
-        deadline = time.time() + 120
-        results = []
-        while time.time() < deadline:
-            results = topics["results"].read_all()
-            if len(results) >= n:
-                break
-            time.sleep(1.0)
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
-    assert len(results) == n
-    got = {
-        json.loads(r)["payload"]["status"]["id"]: json.loads(r)
-        for r in results
-    }
-    assert not any(v["is_partial"] for v in got.values())
+    ) as run:
+        results = wait_results(run, n, 120)
+    assert_matches_batch(results, batch)
     # every committed epoch also landed its marker RECORD atomically, and
     # epoch_committed resolves from the marker stream even with the
     # local cache wiped (the crash-before-cache-write recovery path)
@@ -1058,20 +901,6 @@ def test_full_topology_over_transactional_commits(spark, sf_dir, tmp_path):
         ignore_errors=True,
     )
     assert topics["results"].epoch_committed(some_epoch) is True
-    want_df = fragments.finalize_results(
-        fanin.fanin_batch(fragments.build_fragments(parsed_batch))
-    )
-    want = {
-        r["tag"]: json.loads(r["value"])
-        for r in want_df.select(
-            F.col("tag"), F.to_json(F.struct(F.col("payload"))).alias("value")
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for tag in want:
-        assert json.dumps(got[tag]["payload"], sort_keys=True) == json.dumps(
-            want[tag]["payload"], sort_keys=True
-        ), f"payload mismatch for {tag}"
 
 
 def test_spool_txn_commit_lands_data_before_markers(tmp_path, monkeypatch):

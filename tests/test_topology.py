@@ -1,15 +1,15 @@
 """End-to-end async RPC topology: 6 streaming queries + 4 service simulators
 over file topics, golden-compared against the in-process batch pipeline."""
 
-import json
-import time
-
 import pytest
-from pyspark.sql import functions as F
 
-from bigtwine_streamprocessor_spark import corpus, fragments
-from bigtwine_streamprocessor_spark.operators.parse import parse_tweets
-from bigtwine_streamprocessor_spark.streaming import fanin, topology
+from bigtwine_streamprocessor_spark.streaming import topology
+from tests.topology_drive import (
+    assert_matches_batch,
+    parsed_batch,
+    wait_results,
+    write_feed,
+)
 
 N_TWEETS = 30
 
@@ -29,60 +29,16 @@ def test_topology_source_has_no_driver_collects():
 
 @pytest.mark.slow
 def test_async_topology_matches_batch(spark, sf_dir, tmp_path):
-    parsed_batch = parse_tweets(
-        corpus.tweets_df(spark, sf_dir), skip_retweets=True
-    ).orderBy("id").limit(N_TWEETS).cache()
-    n = parsed_batch.count()
-
+    batch = parsed_batch(spark, sf_dir, N_TWEETS)
+    n = batch.count()
     # feed the tweet stream as one json-lines file
-    indir = tmp_path / "tweets_in"
-    indir.mkdir()
-    rows = parsed_batch.collect()
-    with open(indir / "batch0.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r.asDict()) + "\n")
-    stream = (
-        spark.readStream.schema(parsed_batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(indir))
-    )
-
-    queries, sims, topics = topology.start_topology(
+    stream = write_feed(spark, batch, tmp_path / "tweets_in")()
+    with topology.start_topology(
         spark, str(tmp_path / "topics"), stream, "a-topo", timeout_ms=20_000
-    )
-    try:
-        deadline = time.time() + 120
-        results = []
-        while time.time() < deadline:
-            results = topics["results"].read_all()
-            if len(results) >= n:
-                break
-            time.sleep(1.0)
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
-
-    assert len(results) == n, f"expected {n} assembled tweets, got {len(results)}"
-    got = {json.loads(r)["payload"]["status"]["id"]: json.loads(r) for r in results}
-    assert not any(v["is_partial"] for v in got.values()), "all should complete"
-
+    ) as run:
+        results = wait_results(run, n, 120)
     # golden-compare against the in-process batch pipeline on the same tweets
-    want_df = fragments.finalize_results(
-        fanin.fanin_batch(fragments.build_fragments(parsed_batch))
-    )
-    want = {
-        r["tag"]: json.loads(r["value"])
-        for r in want_df.select(
-            F.col("tag"), F.to_json(F.struct(F.col("payload"))).alias("value")
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for tag in want:
-        g = json.dumps(got[tag]["payload"], sort_keys=True)
-        w = json.dumps(want[tag]["payload"], sort_keys=True)
-        assert g == w, f"payload mismatch for tweet {tag}:\n  async={g}\n  batch={w}"
+    assert_matches_batch(results, batch)
 
 
 # ---------------------------------------------------------------------------
@@ -208,95 +164,30 @@ def test_topology_restart_is_exactly_once(spark, sf_dir, tmp_path):
     (`test_fanin_state_survives_checkpoint_restart` covers the unit). The
     reference gets the analogous guarantee from Flink checkpoints plus
     broker semantics (`TwitterStreamJob.java:227-229`)."""
-    parsed_batch = parse_tweets(
-        corpus.tweets_df(spark, sf_dir), skip_retweets=True
-    ).orderBy("id").limit(N_TWEETS).cache()
-    n = parsed_batch.count()
-
+    batch = parsed_batch(spark, sf_dir, N_TWEETS)
+    n = batch.count()
     # several input files so the stop lands between epochs with work in
     # flight (maxFilesPerTrigger=1 -> one epoch per file)
-    indir = tmp_path / "tweets_in"
-    indir.mkdir()
-    rows = parsed_batch.collect()
-    per_file = max(1, n // 6)
-    for i in range(0, n, per_file):
-        with open(indir / f"batch{i:04d}.json", "w") as f:
-            for r in rows[i : i + per_file]:
-                f.write(json.dumps(r.asDict()) + "\n")
-
-    def make_stream():
-        return (
-            spark.readStream.schema(parsed_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(indir))
-        )
-
+    make_stream = write_feed(spark, batch, tmp_path / "tweets_in", files=6)
     root = str(tmp_path / "topics")
 
     # ---- first life: run until SOME results exist, then hard-stop --------
-    queries, sims, topics = topology.start_topology(
+    with topology.start_topology(
         spark, root, make_stream(), "a-topo", timeout_ms=60_000
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            if len(topics["results"].read_all()) >= 1:
-                break
-            time.sleep(0.5)
-        assert topics["results"].read_all(), "no results before the stop"
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
-    for s in sims:
-        s.join(timeout=10)
-
-    mid = len(topics["results"].read_all())
+    ) as run:
+        wait_results(run, 1, 90)
+    mid = len(run.topics["results"].read_all())
     assert mid < n, "stop landed after completion; nothing left to recover"
 
     # ---- second life: same root (checkpoints + topics + svc offsets) -----
-    queries, sims, topics = topology.start_topology(
+    with topology.start_topology(
         spark, root, make_stream(), "a-topo", timeout_ms=60_000
-    )
-    try:
-        deadline = time.time() + 150
-        results = []
-        while time.time() < deadline:
-            results = topics["results"].read_all()
-            if len(results) >= n:
-                break
-            time.sleep(1.0)
-    finally:
-        for q in queries:
-            q.stop()
-        for s in sims:
-            s.stop()
+    ) as run:
+        results = wait_results(run, n, 150)
 
-    # exactly-once: n results, one per tweet, none partial
-    assert len(results) == n, f"expected {n} results, got {len(results)}"
-    parsed_results = [json.loads(r) for r in results]
-    tags = [r["payload"]["status"]["id"] for r in parsed_results]
-    assert len(set(tags)) == n, "duplicate result for some tweet"
-    assert not any(r["is_partial"] for r in parsed_results)
-
-    # content equality with the in-process batch pipeline (duplicate
-    # fragments would concat-double entities and fail here)
-    want_df = fragments.finalize_results(
-        fanin.fanin_batch(fragments.build_fragments(parsed_batch))
-    )
-    want = {
-        r["tag"]: json.loads(r["value"])
-        for r in want_df.select(
-            F.col("tag"), F.to_json(F.struct(F.col("payload"))).alias("value")
-        ).collect()
-    }
-    got = {r["payload"]["status"]["id"]: r for r in parsed_results}
-    assert set(got) == set(want)
-    for tag in want:
-        g = json.dumps(got[tag]["payload"], sort_keys=True)
-        w = json.dumps(want[tag]["payload"], sort_keys=True)
-        assert g == w, f"payload mismatch for tweet {tag}:\n  async={g}\n  batch={w}"
+    # exactly-once: n results, one per tweet, none partial, each equal to
+    # the in-process batch pipeline's
+    assert_matches_batch(results, batch)
 
 
 def test_topic_counter_matches_read_all(tmp_path):
@@ -320,3 +211,32 @@ def test_topic_counter_matches_read_all(tmp_path):
     topic.append_lines(["d", "e", "f"])
     assert counter.count() == len(topic.read_all()) == 6
     assert counter.count() == 6  # idempotent poll
+
+
+@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
+def test_dead_simulator_names_its_request_file(tmp_path):
+    """A simulator that dies on a request file records the file and the
+    error, leaves that file's offset uncommitted (a restart retries it),
+    and TopologyRun.check() reports the cause."""
+    import os
+
+    from bigtwine_streamprocessor_spark.streaming import transport
+
+    req = transport.FileTopic(str(tmp_path), "ner-requests")
+    resp = transport.FileTopic(str(tmp_path), "ner-responses")
+    transport.append_lines_to_dir(req.dir, ["not json"], fname="bad")
+    offsets = str(tmp_path / "offsets.log")
+    sim = transport.ServiceSimulator(
+        req, resp, transport.ner_service, poll_s=0.05, offsets_path=offsets
+    )
+    sim.start()
+    sim.join(5)
+    assert not sim.is_alive(), "the simulator must die on a bad request"
+    assert "bad.json" in sim.error and "JSONDecodeError" in sim.error
+    logged = open(offsets).read() if os.path.exists(offsets) else ""
+    assert "bad.json" not in logged
+    assert resp.read_all() == []
+    with pytest.raises(
+        RuntimeError, match=r"service simulator ner died: .*bad\.json.*JSONDecodeError"
+    ):
+        topology.TopologyRun([], [sim], {}).check()
