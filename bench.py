@@ -639,18 +639,6 @@ def main() -> None:
             "steady_tweets_per_s": cap_knee.get("steady_tweets_per_s"),
             "steady_consistency": cap_knee.get("steady_consistency"),
         }
-        # STATE-WALL point (r13 verdict task 4): sustained rate at ~1M
-        # in-flight fan-in keys is a soak-scale measurement (minutes of
-        # feed build + run) — re-measured by scripts/topology_scaling.py
-        # per round, not inside every bench. Surface the stored point with
-        # its provenance so the capacity block answers both sizing
-        # questions (warm small-state knee vs bounded-state ceiling).
-        wall_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "STATE_WALL.json"
-        )
-        if os.path.isfile(wall_path):
-            with open(wall_path) as fh:
-                streaming_cap["state_wall"] = json.load(fh)
     except Exception as exc:
         streaming_cap = {"error": f"{type(exc).__name__}: {exc}"[:300]}
 
@@ -783,10 +771,6 @@ def main() -> None:
         cap_compact["knee_steady_tweets_per_s"] = streaming_cap["knee"].get(
             "steady_tweets_per_s"
         )
-    if "state_wall" in streaming_cap:
-        cap_compact["state_wall_tweets_per_s"] = streaming_cap[
-            "state_wall"
-        ].get("sustained_tweets_per_s")
     compact = {
         "metric": "headline_queries_total_wall",
         "value": total,

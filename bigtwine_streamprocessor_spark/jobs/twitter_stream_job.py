@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -103,21 +102,10 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def run(argv: list[str] | None = None) -> None:
-    args = build_parser().parse_args(argv)
-    if bool(args.dataset_path) == bool(args.tweet_json_path):
-        # exactly-one-input validation (`TwitterStreamJob.java:103-112`)
-        print("exactly one of --dataset-path / --tweet-json-path required",
-              file=sys.stderr)
-        sys.exit(2)
-
-    timeout_s = args.processing_timeout or (
-        DEFAULT_DATASET_TIMEOUT_S if args.dataset_path else DEFAULT_STREAM_TIMEOUT_S
-    )
-    langs = args.lang.split(",") if args.lang else None
-    spark = get_spark(app_name=f"neel-{args.job_id}")
-
-    streaming = args.mode == "stream"
+def _analysed_tweets(spark, args, streaming: bool) -> DataFrame:
+    """The tweets the job analyses: the selected input source, parsed, with
+    the retweet and language filters applied (a stream, or the batch form
+    of the same input)."""
     if args.dataset_path:
         raw = read_dataset_tsv(spark, args.dataset_path, streaming=streaming)
         raw = normalize_dataset(raw)
@@ -143,8 +131,25 @@ def run(argv: list[str] | None = None) -> None:
             F.col("status.user.location").alias("user__location"),
             F.coalesce(F.col("status.retweet"), F.lit(False)).alias("is_retweet"),
         )
+    langs = args.lang.split(",") if args.lang else None
+    return parse_tweets(raw, skip_retweets=args.skip_retweets, languages=langs)
 
-    parsed = parse_tweets(raw, skip_retweets=args.skip_retweets, languages=langs)
+
+def run(argv: list[str] | None = None) -> None:
+    args = build_parser().parse_args(argv)
+    if bool(args.dataset_path) == bool(args.tweet_json_path):
+        # exactly-one-input validation (`TwitterStreamJob.java:103-112`)
+        print("exactly one of --dataset-path / --tweet-json-path required",
+              file=sys.stderr)
+        sys.exit(2)
+
+    timeout_s = args.processing_timeout or (
+        DEFAULT_DATASET_TIMEOUT_S if args.dataset_path else DEFAULT_STREAM_TIMEOUT_S
+    )
+    spark = get_spark(app_name=f"neel-{args.job_id}")
+
+    streaming = args.mode == "stream"
+    parsed = _analysed_tweets(spark, args, streaming)
     frags = build_fragments(parsed)
 
     if not streaming:
@@ -168,6 +173,9 @@ def run(argv: list[str] | None = None) -> None:
     if args.transport == "async":
         from ..streaming import topology
 
+        # every analysed tweet gets exactly one result (complete or
+        # partial), so the batch form of the input says how many to wait for
+        expected = _analysed_tweets(spark, args, streaming=False).count()
         topo = topology.start_topology(
             spark,
             args.output_path + "_topics",
@@ -176,18 +184,26 @@ def run(argv: list[str] | None = None) -> None:
             timeout_ms=timeout_s * 1000,
             trigger_s=args.trigger_seconds,
         )
+        # a pending partial fires within the fan-in timeout plus a trigger,
+        # so a topology idle for longer has stopped short
+        idle_s = timeout_s + 2 * args.trigger_seconds
         with topo:
-            run_until_idle(
-                topo.queries[0], idle_timeout_s=timeout_s + 2 * args.trigger_seconds
-            )
-            # let downstream hops drain after the source idles
-            time.sleep(timeout_s + 2 * args.trigger_seconds)
-        lines = topo.topics["results"].read_all()
+            topo.wait_results(expected, idle_s=idle_s)
+            lines = topo.topics["results"].read_all()
+            stopped_at = topo.describe() if len(lines) < expected else None
         os.makedirs(args.output_path, exist_ok=True)
         with open(os.path.join(args.output_path, "results.json"), "w") as f:
             f.write("\n".join(lines) + ("\n" if lines else ""))
-        print(f"job={args.job_id} mode=stream transport=async results={len(lines)}")
+        print(
+            f"job={args.job_id} mode=stream transport=async "
+            f"results={len(lines)} expected={expected}"
+        )
         spark.stop()
+        if stopped_at is not None:
+            sys.exit(
+                f"results={len(lines)} expected={expected}: every hop read "
+                f"no input for {idle_s} s first\n{stopped_at}"
+            )
         return
 
     assembled = fanin.fanin_stream(frags, timeout_ms=timeout_s * 1000)

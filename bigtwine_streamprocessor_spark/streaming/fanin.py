@@ -17,7 +17,9 @@ keyed global window + custom trigger (SURVEY.md §2.5):
   concatenate (`NeelProcessedTweetWindowFunction.java:57-61`) — preserved.
 
 Spark mapping: ``groupBy(tag).applyInPandasWithState`` with
-``GroupStateTimeout.ProcessingTimeTimeout``. The state holds raw fragment JSON
+``GroupStateTimeout.ProcessingTimeTimeout``; the opt-in event-time mode runs
+the same state function with a data-determined deadline and
+``EventTimeTimeout`` (``make_fanin_fn``). The state holds raw fragment JSON
 (small, per-key); assembly back to typed columns happens AFTER the stateful
 operator with the same JVM-side expressions as the batch path, so batch and
 stream produce identical output on bounded input (parity test).
@@ -81,24 +83,20 @@ ASSEMBLED_OUT = T.StructType(
 COMPLETE_SET = frozenset(STREAM_TYPES)
 
 
+_STATE_FIELDS = tuple(STATE_SCHEMA.fieldNames())
+# the state fields an output row carries, between its tag and is_partial
+_ROW_FIELDS = _STATE_FIELDS[:4]
+_EMPTY = (None, (), (), None, (), None)  # a key's state before its first fragment
+
+
 def _emit(tag: str, s: dict[str, Any], partial: bool) -> pd.DataFrame:
     return pd.DataFrame(
-        [
-            {
-                "tag": tag,
-                "status_json": s["status_json"],
-                "entities_json": s["entities_json"],
-                "resources_json": s["resources_json"],
-                "location_json": s["location_json"],
-                "is_partial": partial,
-            }
-        ]
+        [{"tag": tag, **{k: s[k] for k in _ROW_FIELDS}, "is_partial": partial}]
     )
 
 
 def _absorb(s: dict[str, Any], st: str, pj) -> None:
-    """Fold one fragment row into the accumulating state dict (shared by the
-    processing-time and event-time fan-in functions)."""
+    """Fold one fragment row into the accumulating state dict."""
     s["received"].add(st)
     if st == "status":
         s["status_json"] = pj  # last write wins (single status)
@@ -113,77 +111,87 @@ def _absorb(s: dict[str, Any], st: str, pj) -> None:
         s["location_json"] = pj
 
 
-def make_fanin_fn(timeout_ms: int):
-    """Build the applyInPandasWithState function for a given timeout."""
+def make_fanin_fn(timeout_ms: int, event_time: bool = False):
+    """Build the applyInPandasWithState function for a given timeout.
+
+    The two deadline kinds differ only in the deadline rule and in how the
+    timer is armed:
+
+    * processing time (the reference's trigger): the deadline is the FIRST
+      arrival + timeout and never moves; Spark clears the timeout on every
+      invocation, so each one re-arms with the REMAINING time;
+    * event time (``event_time=True``, input carries ``ts``): the deadline
+      is min(fragment event time) + timeout, a DETERMINISTIC function of
+      the data, so a replay emits identical partials regardless of arrival
+      order, cluster speed or wall clock. The timer fires when the
+      WATERMARK passes it (``setTimeoutTimestamp``)."""
 
     def fanin(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         tag = key[0]
+        s = dict(zip(_STATE_FIELDS, state.get if state.exists else _EMPTY))
         if state.hasTimedOut:
             # timer path: partial emit iff status arrived, else silent purge
             # (`TwitterStreamTypeWindowTrigger.java:69-78`)
-            (sj, ej, rj, lj, recv, _dl) = state.get
             state.remove()
-            if sj is not None:
-                yield _emit(
-                    tag,
-                    {
-                        "status_json": sj,
-                        "entities_json": ej,
-                        "resources_json": rj,
-                        "location_json": lj,
-                    },
-                    True,
-                )
+            if s["status_json"] is not None:
+                yield _emit(tag, s, True)
             return
 
-        if state.exists:
-            (sj, ej, rj, lj, recv, deadline_ms) = state.get
-            s = {
-                "status_json": sj,
-                "entities_json": list(ej),
-                "resources_json": list(rj),
-                "location_json": lj,
-                "received": set(recv),
-            }
-        else:
-            # one-shot timer: deadline fixes at FIRST element + timeout
-            # (`TwitterStreamTypeWindowTrigger.java:44-48`)
-            deadline_ms = state.getCurrentProcessingTimeMs() + timeout_ms
-            s = {
-                "status_json": None,
-                "entities_json": [],
-                "resources_json": [],
-                "location_json": None,
-                "received": set(),
-            }
+        if s["deadline_ms"] is None and not event_time:
+            # one-shot timer: the deadline fixes at the FIRST element +
+            # timeout (`TwitterStreamTypeWindowTrigger.java:44-48`)
+            s["deadline_ms"] = state.getCurrentProcessingTimeMs() + timeout_ms
+        s["entities_json"] = list(s["entities_json"])
+        s["resources_json"] = list(s["resources_json"])
+        s["received"] = set(s["received"])
 
         for pdf in pdfs:
             for row in pdf.itertuples(index=False):
+                if event_time:
+                    # EARLIEST event time + timeout: a late-arriving earlier
+                    # fragment pulls the deadline back, keeping it
+                    # deterministic on the data
+                    cand = row.ts.value // 1_000_000 + timeout_ms
+                    if s["deadline_ms"] is None or cand < s["deadline_ms"]:
+                        s["deadline_ms"] = cand
                 _absorb(s, row.stream_type, row.payload_json)
 
         if s["received"] >= COMPLETE_SET:
             # FIRE_AND_PURGE (`TwitterStreamTypeWindowTrigger.java:60-62`)
             state.remove()
             yield _emit(tag, s, False)
-        else:
-            state.update(
-                (
-                    s["status_json"],
-                    s["entities_json"],
-                    s["resources_json"],
-                    s["location_json"],
-                    sorted(s["received"]),
-                    deadline_ms,
-                )
+            return
+        s["received"] = sorted(s["received"])
+        state.update(tuple(s[k] for k in _STATE_FIELDS))
+        # the timeout is cleared on every invocation: re-arm the SAME stored
+        # deadline (no roll-forward)
+        if event_time:
+            # Spark rejects timestamps at/below the watermark: clamp above
+            state.setTimeoutTimestamp(
+                max(s["deadline_ms"], state.getCurrentWatermarkMs() + 1)
             )
-            # Spark clears the timeout each invocation; re-arm with the
-            # REMAINING time so the original deadline holds (no roll-forward)
-            remaining = max(1, deadline_ms - state.getCurrentProcessingTimeMs())
-            state.setTimeoutDuration(remaining)
+        else:
+            remaining = s["deadline_ms"] - state.getCurrentProcessingTimeMs()
+            state.setTimeoutDuration(max(1, remaining))
 
     return fanin
+
+
+def _fanin(fragments: DataFrame, timeout_ms: int, event_time: bool) -> DataFrame:
+    timeout = (
+        GroupStateTimeout.EventTimeTimeout
+        if event_time
+        else GroupStateTimeout.ProcessingTimeTimeout
+    )
+    return fragments.groupBy("tag").applyInPandasWithState(
+        make_fanin_fn(timeout_ms, event_time),
+        outputStructType=ASSEMBLED_OUT,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
 
 
 def fanin_stream(fragments: DataFrame, timeout_ms: int = 15_000) -> DataFrame:
@@ -191,101 +199,13 @@ def fanin_stream(fragments: DataFrame, timeout_ms: int = 15_000) -> DataFrame:
     assembled rows. 15 s default timeout = the reference's stream mode
     (`Constants.java:30`); pass 30 s for dataset mode (`:33`).
     """
-    return fragments.groupBy("tag").applyInPandasWithState(
-        make_fanin_fn(timeout_ms),
-        outputStructType=ASSEMBLED_OUT,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _fanin(fragments, timeout_ms, event_time=False)
 
 
 # Event-time input grain: fragments carry an event timestamp.
 FRAGMENT_IN_TS = T.StructType(
     FRAGMENT_IN.fields + [T.StructField("ts", T.TimestampType(), False)]
 )
-
-
-def make_fanin_fn_event_time(timeout_ms: int):
-    """Event-time twin of ``make_fanin_fn``: the deadline is
-    min(fragment event time) + timeout — a DETERMINISTIC function of the
-    DATA, so a 100 TB replay emits identical partials regardless of arrival
-    order, cluster speed, or wall clock. (The reference's processing-time
-    trigger — faithfully mirrored by ``make_fanin_fn`` — cannot promise
-    that.) The timer fires when the WATERMARK passes the deadline
-    (``setTimeoutTimestamp`` + ``EventTimeTimeout``)."""
-
-    def fanin(
-        key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        tag = key[0]
-        if state.hasTimedOut:
-            (sj, ej, rj, lj, recv, _dl) = state.get
-            state.remove()
-            if sj is not None:
-                yield _emit(
-                    tag,
-                    {
-                        "status_json": sj,
-                        "entities_json": ej,
-                        "resources_json": rj,
-                        "location_json": lj,
-                    },
-                    True,
-                )
-            return
-
-        if state.exists:
-            (sj, ej, rj, lj, recv, deadline_ms) = state.get
-            s = {
-                "status_json": sj,
-                "entities_json": list(ej),
-                "resources_json": list(rj),
-                "location_json": lj,
-                "received": set(recv),
-            }
-        else:
-            deadline_ms = None
-            s = {
-                "status_json": None,
-                "entities_json": [],
-                "resources_json": [],
-                "location_json": None,
-                "received": set(),
-            }
-
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                # deadline = EARLIEST event time + timeout; a late-arriving
-                # earlier fragment pulls it back, keeping the fixpoint
-                # deterministic on the data
-                cand = row.ts.value // 1_000_000 + timeout_ms
-                if deadline_ms is None or cand < deadline_ms:
-                    deadline_ms = cand
-                _absorb(s, row.stream_type, row.payload_json)
-
-        if s["received"] >= COMPLETE_SET:
-            state.remove()
-            yield _emit(tag, s, False)
-        else:
-            state.update(
-                (
-                    s["status_json"],
-                    s["entities_json"],
-                    s["resources_json"],
-                    s["location_json"],
-                    sorted(s["received"]),
-                    deadline_ms,
-                )
-            )
-            # absolute event-time deadline (cleared each invocation like all
-            # GroupState timeouts — re-set to the SAME stored instant); Spark
-            # rejects timestamps at/below the watermark, so clamp just above
-            state.setTimeoutTimestamp(
-                max(deadline_ms, state.getCurrentWatermarkMs() + 1)
-            )
-
-    return fanin
 
 
 def fanin_stream_event_time(
@@ -298,16 +218,8 @@ def fanin_stream_event_time(
     processing-time mode; the partial-emit timeout is evaluated against the
     WATERMARK (max seen ts - ``watermark_delay``), giving deterministic
     replay semantics for bounded/backfill runs at scale."""
-    return (
-        fragments.withWatermark("ts", watermark_delay)
-        .groupBy("tag")
-        .applyInPandasWithState(
-            make_fanin_fn_event_time(timeout_ms),
-            outputStructType=ASSEMBLED_OUT,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _fanin(
+        fragments.withWatermark("ts", watermark_delay), timeout_ms, event_time=True
     )
 
 

@@ -34,11 +34,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .transport import (
-    STAGING,
-    chunked,
-    dir_envelope_writer,
-    dir_line_writer,
-    make_envelope,
+    FileTopic,
+    _visible_json_files,
+    envelopes,
+    read_lines,
 )
 
 
@@ -162,7 +161,8 @@ class KafkaTopic:
 
     ``exactly_once_replay`` is True (r9 verdict task 4 — previously this
     transport degraded to at-least-once with a one-time warning): epoch
-    publishes follow the SAME stage-then-promote discipline as FileTopic.
+    publishes follow the SAME stage-then-promote discipline as FileTopic,
+    through a ``FileTopic(stage_root, name)`` that is the staged-epoch store.
     Writers given an ``fname_prefix`` buffer their partition's lines under
     ``<stage_root>/<topic>/.staging/<epoch>/`` instead of producing
     immediately; ``commit_epoch`` drains the staged epoch through the
@@ -206,6 +206,7 @@ class KafkaTopic:
         self.name = name
         self._factory = producer_factory or default_producer_factory
         self.stage_root = stage_root
+        self._stage_topic: FileTopic | None = None  # see _stage()
         # Optional transactional commit path (r11 verdict task 1): when set,
         # commit_epoch wraps the staged drain + a marker RECORD in one Kafka
         # transaction keyed by query+epoch and the marker FILE becomes a
@@ -247,10 +248,7 @@ class KafkaTopic:
         ):
             shutil.rmtree(self._topic_stage(), ignore_errors=True)
             return
-        marker_dir = os.path.join(self._topic_stage(), "_committed")
-        stale = (
-            sorted(os.listdir(marker_dir)) if os.path.isdir(marker_dir) else []
-        )
+        stale = _visible_json_files(os.path.join(self._topic_stage(), "_committed"))
         if stale:
             raise RuntimeError(
                 f"KafkaTopic({self.name!r}): fresh checkpoint (epoch ids "
@@ -265,7 +263,11 @@ class KafkaTopic:
                 "clear it before a fresh start."
             )
 
-    def _topic_stage(self) -> str:
+    def _stage(self) -> FileTopic:
+        """The staged-epoch store: FileTopic's layout under
+        ``<stage_root>/<name>``, created once ``stage_root`` is bound. Its
+        staging dirs hold the epochs not yet produced; its own commit
+        rename is never used (see ``commit_epoch``)."""
         if self.stage_root is None:
             raise RuntimeError(
                 f"KafkaTopic({self.name!r}): staged-epoch publish needs a "
@@ -276,10 +278,12 @@ class KafkaTopic:
                 "default: a stable node-local path silently skips or "
                 "loses replayed epochs."
             )
-        return os.path.join(self.stage_root, self.name)
+        if self._stage_topic is None:
+            self._stage_topic = FileTopic(self.stage_root, self.name)
+        return self._stage_topic
 
-    def _staging_dir(self, prefix: str) -> str:
-        return os.path.join(self._topic_stage(), STAGING, prefix)
+    def _topic_stage(self) -> str:
+        return self._stage().dir
 
     def _marker(self, prefix: str) -> str:
         return os.path.join(self._topic_stage(), "_committed", f"{prefix}.json")
@@ -327,12 +331,9 @@ class KafkaTopic:
         os.replace(tmp, marker)
 
     def begin_epoch(self, prefix: str) -> None:
-        """Discard staging left by a crashed prior attempt — its
-        partitioning may differ from the rerun's, and nothing staged was
-        ever produced, so wholesale removal is safe (FileTopic's rule)."""
-        import shutil
-
-        shutil.rmtree(self._staging_dir(prefix), ignore_errors=True)
+        """Discard staging left by a crashed prior attempt (FileTopic's
+        rule: nothing staged was ever produced)."""
+        self._stage().begin_epoch(prefix)
 
     def staged_partition_count(self, prefix: str) -> int:
         """Staged partition files VISIBLE TO THE DRIVER for this epoch.
@@ -340,14 +341,7 @@ class KafkaTopic:
         non-empty partitions counted on the executors — a shortfall means
         ``stage_root`` is not actually shared storage (node-local tmp on a
         cluster) and committing would silently drop rows (advisor r10)."""
-        staged = self._staging_dir(prefix)
-        if not os.path.isdir(staged):
-            return 0
-        return sum(
-            1
-            for fn in os.listdir(staged)
-            if fn.endswith(".json") and not fn.startswith((".", "_"))
-        )
+        return self._stage().staged_partition_count(prefix)
 
     def commit_epoch(self, prefix: str) -> None:
         """Drain the staged epoch and commit it. An epoch that staged
@@ -375,20 +369,14 @@ class KafkaTopic:
         * the marker FILE is demoted to a cache of the marker record;
           ``epoch_committed`` falls back to the factory's read-committed
           ``committed_markers`` reader, closing even the crash between
-          commit_transaction and the cache write."""
-        import shutil
+          commit_transaction and the cache write.
 
+        The stage topic's own ``commit_epoch`` rename is NOT the marker: a
+        crash between that rename and the produce would read as committed
+        and lose the epoch."""
         if self.epoch_committed(prefix):
             return
-        staged = self._staging_dir(prefix)
-        lines: list[str] = []
-        if os.path.isdir(staged):
-            for fn in sorted(os.listdir(staged)):
-                if fn.endswith(".json") and not fn.startswith((".", "_")):
-                    with open(os.path.join(staged, fn)) as f:
-                        lines += [
-                            ln for ln in f.read().splitlines() if ln.strip()
-                        ]
+        lines = self._stage().staged_lines(prefix)
         payload = {"epoch": prefix, "lines": len(lines)}
         if self._txn_factory is None:
             kafka_append(self.bootstrap, self.name, lines, self._factory)
@@ -419,7 +407,7 @@ class KafkaTopic:
                 if callable(close):
                     close()
         self._cache_marker(prefix, payload)
-        shutil.rmtree(staged, ignore_errors=True)
+        self._stage().begin_epoch(prefix)  # drop the drained staging
 
     # ---- writers (executor side, picklable) --------------------------------
 
@@ -428,8 +416,7 @@ class KafkaTopic:
 
         With ``fname_prefix`` (query+epoch) the partition STAGES its lines
         for ``commit_epoch`` — the same ``.staging/<epoch>/p<id>`` discipline
-        as the file transport (the writer closure is literally
-        ``dir_line_writer`` pointed at this topic's stage dir). Without a
+        as the file transport (the writer is the stage topic's own). Without a
         prefix the write produces immediately (fire-and-forget paths).
         Downstream semantics of duplicates, were the commit window ever
         hit: a replayed epoch's status fragments are absorbed by the
@@ -437,7 +424,7 @@ class KafkaTopic:
         own duplicate semantics,
         `NeelProcessedTweetWindowFunction.java:57-61`)."""
         if fname_prefix is not None:
-            return dir_line_writer(self._topic_stage(), fname_prefix)
+            return self._stage().line_writer(fname_prefix)
         bootstrap, name, factory = self.bootstrap, self.name, self._factory
 
         def write(rows) -> None:
@@ -458,22 +445,11 @@ class KafkaTopic:
         so epoch-level — not content-level — dedup is what keeps a replayed
         request batch single-shot)."""
         if fname_prefix is not None:
-            return dir_envelope_writer(
-                self._topic_stage(), out_topic, chunk, fname_prefix
-            )
+            return self._stage().envelope_writer(out_topic, chunk, fname_prefix)
         bootstrap, name, factory = self.bootstrap, self.name, self._factory
 
         def write(rows) -> None:
-            items = [json.loads(r["item"]) for r in rows]
-            if not items:
-                return
-            groups = chunked(items, chunk) if chunk else [items]
-            kafka_append(
-                bootstrap,
-                name,
-                [make_envelope(g, out_topic) for g in groups],
-                factory,
-            )
+            kafka_append(bootstrap, name, envelopes(rows, out_topic, chunk), factory)
 
         return write
 
@@ -529,8 +505,7 @@ class SpoolProducer:
             self._buf.append((topic, value.decode("utf-8")))
 
     def flush(self) -> None:
-        import os
-
+        # looked up per call: tests interpose on transport.append_lines_to_dir
         from .transport import append_lines_to_dir
 
         with self._lock:
@@ -607,8 +582,6 @@ class SpoolTxnProducer:
         self._buf.append((topic, value.decode("utf-8")))
 
     def commit_transaction(self) -> None:
-        import os
-
         from .transport import append_lines_to_dir
 
         by_topic: dict[str, list[str]] = {}
@@ -644,17 +617,7 @@ class SpoolTxnFactory:
         return SpoolTxnProducer(self.spool)
 
     def committed_markers(self, bootstrap: str, marker_topic: str) -> list[str]:
-        import os
-
-        d = os.path.join(self.spool, marker_topic)
-        if not os.path.isdir(d):
-            return []
-        out: list[str] = []
-        for fn in sorted(os.listdir(d)):
-            if fn.endswith(".json") and not fn.startswith((".", "_")):
-                with open(os.path.join(d, fn)) as f:
-                    out += [ln for ln in f.read().splitlines() if ln.strip()]
-        return out
+        return read_lines(os.path.join(self.spool, marker_topic))
 
 
 class SpoolBackedKafkaTopic(KafkaTopic):
@@ -676,8 +639,6 @@ class SpoolBackedKafkaTopic(KafkaTopic):
         stage_root: str | None = None,
         transactional: bool = False,
     ):
-        from .transport import FileTopic
-
         super().__init__(
             f"spool:{root}",
             name,

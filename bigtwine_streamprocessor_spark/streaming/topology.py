@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import os
 import time
+from datetime import datetime
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +46,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..fragments import status_payload_col
 from ..operators.parse import has_user_location
 from .fanin import FRAGMENT_IN, fanin_stream, parse_assembled
-from .transport import FileTopic, ServiceSimulator, TopicCounter
+from .transport import FileTopic, ServiceSimulator, TopicCounter, _visible_json_files
 from .transport import geo_service, nel_service, ner_service, resolver_service
 
 TOPIC_NAMES = [
@@ -348,6 +349,29 @@ def _cause(exc) -> str:
     return (named[-1] if named else text.splitlines()[0] if text else repr(exc))[:500]
 
 
+def _service(sim: ServiceSimulator) -> str:
+    return sim.req.name.removesuffix("-requests")
+
+
+def _last_input_at(q: StreamingQuery) -> float | None:
+    """Epoch seconds at which the latest recent batch of ``q`` that read
+    input ended, or None when none of its recent batches read any."""
+    for p in reversed(q.recentProgress):
+        if p["numInputRows"]:
+            start = datetime.fromisoformat(p["timestamp"]).timestamp()
+            return start + p["durationMs"].get("triggerExecution", 0) / 1000
+    return None
+
+
+def _busy(q: StreamingQuery) -> bool:
+    """A trigger is running on data (or is the first one, still starting),
+    or the query's state still holds keys whose timers have yet to fire."""
+    st, lp = q.status, q.lastProgress
+    if st["isTriggerActive"] and (st["isDataAvailable"] or lp is None):
+        return True
+    return lp is not None and any(o["numRowsTotal"] for o in lp["stateOperators"])
+
+
 class TopologyRun(NamedTuple):
     """A started topology: its queries (q1..q6, in order), service
     simulators and topics. Unpacks as ``(queries, sims, topics)``. Use it as
@@ -368,23 +392,59 @@ class TopologyRun(NamedTuple):
                 raise RuntimeError(f"topology query q{n} died: {why}")
         for sim in self.sims:
             if not sim.is_alive():
-                svc = sim.req.name.removesuffix("-requests")
                 raise RuntimeError(
-                    f"service simulator {svc} died: "
+                    f"service simulator {_service(sim)} died: "
                     f"{sim.error or 'thread ended without an error'}"
                 )
 
-    def wait_results(self, n: int, timeout_s: float) -> int:
-        """Poll the results topic until it holds ``n`` lines or
-        ``timeout_s`` passes, calling ``check()`` on every poll. Returns
-        the line count reached."""
+    def describe(self) -> str:
+        """Where the topology stands: each query's last batch and when it
+        last read input, each simulator's liveness and answered request
+        files, each topic's file count. A run still busy under load reads
+        differently from one that lost a result."""
+        now = time.time()
+        out = []
+        for n, q in enumerate(self.queries, start=1):
+            lp = q.lastProgress
+            if lp is None:
+                out.append(f"q{n}: no batch yet")
+                continue
+            t = _last_input_at(q)
+            ago = "never" if t is None else f"{now - t:.1f} s ago"
+            out.append(
+                f"q{n}: batch {lp['batchId']}, {lp['numInputRows']} rows in, "
+                f"last input {ago}"
+            )
+        for sim in self.sims:
+            alive = "alive" if sim.is_alive() else f"dead ({sim.error})"
+            out.append(f"sim {_service(sim)}: {alive}, {sim.answered} files answered")
+        for name, t in self.topics.items():
+            if hasattr(t, "dir"):
+                out.append(f"topic {name}: {len(_visible_json_files(t.dir))} files")
+        return "\n".join(out)
+
+    def wait_results(
+        self, n: int, timeout_s: float | None = None, idle_s: float | None = None
+    ) -> int:
+        """Poll the results topic until it holds ``n`` lines, calling
+        ``check()`` on every poll. Gives up once ``timeout_s`` passes or,
+        with ``idle_s``, once no query has read input for ``idle_s`` (a
+        query busy on data, or holding fan-in state, counts as reading).
+        Returns the line count reached."""
         counter = TopicCounter(self.topics["results"])
-        deadline = time.time() + timeout_s
+        start = time.time()
         while True:
             got = counter.count()
-            if got >= n or time.time() >= deadline:
+            now = time.time()
+            if got >= n or (timeout_s is not None and now - start >= timeout_s):
                 return got
             self.check()
+            if idle_s is not None and not any(map(_busy, self.queries)):
+                last = max(
+                    (t for t in map(_last_input_at, self.queries) if t), default=0
+                )
+                if now - max(last, start) >= idle_s:
+                    return counter.count()
             time.sleep(0.5)
 
     def stop(self) -> None:

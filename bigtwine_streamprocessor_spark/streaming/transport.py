@@ -123,21 +123,16 @@ def dir_envelope_writer(
     chunk: int | None = None,
     fname_prefix: str | None = None,
 ):
-    """foreachPartition sink: rows with an ``item`` JSON column -> one request
-    envelope per partition (or per ``chunk`` items, e.g. 15 for the
-    geo-decoder, `TwitterStreamJob.java:300`). ``fname_prefix`` dedupes
+    """foreachPartition sink: rows with an ``item`` JSON column -> request
+    envelopes (see ``envelopes``). ``fname_prefix`` dedupes
     epoch replays by publish name (envelopes carry a fresh requestId per
     attempt, so name-level — not content-level — dedup is what keeps a
     replayed request batch single-shot)."""
 
     def write(rows) -> None:
-        items = [json.loads(r["item"]) for r in rows]
-        if not items:
-            return
-        groups = chunked(items, chunk) if chunk else [items]
         append_lines_to_dir(
             topic_dir,
-            [make_envelope(g, out_topic) for g in groups],
+            envelopes(rows, out_topic, chunk),
             fname=_partition_fname(fname_prefix),
         )
 
@@ -160,6 +155,16 @@ def _visible_json_files(topic_dir: str) -> list[str]:
             if fn.endswith(".json") and not fn.startswith((".", "_")):
                 out.append(fn if rel == "." else f"{rel}/{fn}")
     return sorted(out)
+
+
+def read_lines(topic_dir: str) -> list[str]:
+    """The non-blank lines of every visible file under ``topic_dir``, in
+    file-name order (nothing when the dir does not exist)."""
+    out: list[str] = []
+    for rel in _visible_json_files(topic_dir):
+        with open(os.path.join(topic_dir, rel)) as f:
+            out += [ln for ln in f.read().splitlines() if ln.strip()]
+    return out
 
 
 class FileTopic:
@@ -221,14 +226,11 @@ class FileTopic:
         cross-checked by ``topology._epoch_publish`` against the executor-
         side non-empty-partition count to catch a stage dir that is not
         actually on driver+executor-shared storage."""
-        staged = os.path.join(self.dir, STAGING, prefix)
-        if not os.path.isdir(staged):
-            return 0
-        return sum(
-            1
-            for fn in os.listdir(staged)
-            if fn.endswith(".json") and not fn.startswith((".", "_"))
-        )
+        return len(_visible_json_files(os.path.join(self.dir, STAGING, prefix)))
+
+    def staged_lines(self, prefix: str) -> list[str]:
+        """The lines staged for this epoch and not yet committed."""
+        return read_lines(os.path.join(self.dir, STAGING, prefix))
 
     def commit_epoch(self, prefix: str) -> None:
         """Atomically promote the staged epoch: one dir rename makes every
@@ -256,11 +258,7 @@ class FileTopic:
         )
 
     def read_all(self) -> list[str]:
-        out: list[str] = []
-        for rel in _visible_json_files(self.dir):
-            with open(os.path.join(self.dir, rel)) as f:
-                out += [ln for ln in f.read().splitlines() if ln.strip()]
-        return out
+        return read_lines(self.dir)
 
 
 # ---------------------------------------------------------------------------
@@ -372,6 +370,11 @@ class ServiceSimulator(threading.Thread):
         self._halt = threading.Event()
         self.error: str | None = None  # set when run() dies on a request file
 
+    @property
+    def answered(self) -> int:
+        """Request files answered, earlier lives included."""
+        return len(self._seen)
+
     def stop(self):
         self._halt.set()
 
@@ -432,8 +435,16 @@ def make_envelope(items: list, out_topic: str, timeout_s: int = 15) -> str:
     )
 
 
-def chunked(items: list, n: int) -> list[list]:
-    return [items[i : i + n] for i in range(0, len(items), n)] or []
+def envelopes(rows, out_topic: str, chunk: int | None = None) -> list[str]:
+    """Rows with an ``item`` JSON column -> request envelope lines: one for
+    all the items, or one per ``chunk`` items (15 for the geo-decoder,
+    `TwitterStreamJob.java:300`); none without items."""
+    items = [json.loads(r["item"]) for r in rows]
+    step = chunk or len(items) or 1
+    return [
+        make_envelope(items[i : i + step], out_topic)
+        for i in range(0, len(items), step)
+    ]
 
 
 class TopicCounter:

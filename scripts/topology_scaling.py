@@ -242,8 +242,7 @@ def main() -> None:
         help="measure the bounded-state ceiling: one x240 long-feed run at "
         "the capacity knee (trigger 64 / 2x shuffle), recording the "
         "half-window decay as in-flight fan-in state grows toward ~1M "
-        "keys; writes STATE_WALL.json at the repo root for the bench "
-        "capacity block (r13 verdict task 4)",
+        "keys; prints the point as one JSON line",
     )
     ap.add_argument(
         "--restart-soak",
@@ -356,12 +355,6 @@ def main() -> None:
             "shuffle_partitions": wall_shuffle,
             "source": "scripts/topology_scaling.py --state-wall (x240 feed)",
         }
-        out = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "STATE_WALL.json",
-        )
-        with open(out, "w") as fh:
-            json.dump(report, fh, indent=2, sort_keys=True)
         print(json.dumps(report), flush=True)
         spark.stop()
         return

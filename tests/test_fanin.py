@@ -66,13 +66,16 @@ FRAGMENTS = [
 
 
 class _FakeState:
-    """Minimal GroupState stand-in to drive make_fanin_fn deterministically."""
+    """Minimal GroupState stand-in to drive make_fanin_fn deterministically
+    (processing time, or watermark + absolute timestamps)."""
 
-    def __init__(self, now_ms=1_000_000):
+    def __init__(self, now_ms=1_000_000, watermark_ms=0):
         self.now_ms = now_ms
+        self.watermark_ms = watermark_ms
         self._state = None
         self.hasTimedOut = False
         self.armed_ms = None  # last setTimeoutDuration argument
+        self.timeout_ts = None  # last setTimeoutTimestamp argument
 
     @property
     def exists(self):
@@ -93,6 +96,12 @@ class _FakeState:
 
     def getCurrentProcessingTimeMs(self):
         return self.now_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ts = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
 
 
 def _pdf(frs):
@@ -194,21 +203,6 @@ def test_fanin_duplicate_status_last_write_wins_no_double_emit():
     assert not st.exists
 
 
-class _FakeEventState(_FakeState):
-    """GroupState stand-in for the event-time fn (watermark + absolute ts)."""
-
-    def __init__(self, watermark_ms=0):
-        super().__init__()
-        self.watermark_ms = watermark_ms
-        self.timeout_ts = None
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_ts = ms
-
-    def getCurrentWatermarkMs(self):
-        return self.watermark_ms
-
-
 def _pdf_ts(frs, ts_ms):
     import pandas as pd
 
@@ -223,8 +217,8 @@ def test_fanin_event_time_deadline_is_data_determined():
     """Event-time mode: deadline = min(fragment event time) + timeout — a
     pure function of the data. Late-arriving EARLIER fragments pull the
     deadline back; wall clock never enters."""
-    fn = fanin.make_fanin_fn_event_time(timeout_ms=10_000)
-    st = _FakeEventState()
+    fn = fanin.make_fanin_fn(timeout_ms=10_000, event_time=True)
+    st = _FakeState()
 
     list(fn(("7",), _pdf_ts(
         [dict(tag="7", stream_type="linkedTweet", payload=[ENT])], [50_000]
@@ -251,16 +245,24 @@ def test_fanin_event_time_deadline_is_data_determined():
     assert list(fn(("7",), iter([]), st)) == [] and not st.exists
 
 
-def test_fanin_event_time_partial_emit_on_timeout():
-    fn = fanin.make_fanin_fn_event_time(timeout_ms=10_000)
-    st = _FakeEventState()
+@pytest.mark.parametrize("event_time", [False, True], ids=["processing_time", "event_time"])
+def test_fanin_partial_emit_on_timeout(event_time):
+    """A status-only key emits one partial when its timer fires, under
+    either deadline kind, and leaves no state behind."""
+    fn = fanin.make_fanin_fn(timeout_ms=10_000, event_time=event_time)
+    st = _FakeState(now_ms=30_000)
     list(fn(("8",), _pdf_ts(
         [dict(tag="8", stream_type="status", payload=_status("8"))], [30_000]
     ), st))
-    assert st.timeout_ts == 40_000
+    assert st._state[5] == 40_000
+    if event_time:
+        assert st.timeout_ts == 40_000
+    else:
+        assert st.armed_ms == 10_000
     st.hasTimedOut = True
     out = list(fn(("8",), iter([]), st))
     assert len(out) == 1 and bool(out[0].iloc[0]["is_partial"]) is True
+    assert json.loads(out[0].iloc[0]["status_json"])["id"] == "8"
     assert not st.exists
 
 

@@ -2,6 +2,7 @@
 
 import glob
 import json
+import os
 import subprocess
 import sys
 
@@ -9,7 +10,7 @@ import pytest
 
 from bigtwine_streamprocessor_spark.operators.export import EXTENDED_COLUMNS
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _make_fixture(spark, tmp_path, n=40):
@@ -492,8 +493,7 @@ def test_curate_resume_invalidates_on_content_change(spark, sf_dir, tmp_path):
 def test_stream_job_async_transport(tmp_path):
     """``--mode stream --transport async`` runs the full async topology and
     tears it down: the job exits 0, ``results=`` counts the lines of
-    results.json, and no tweet gets two results or a result it was not
-    sent."""
+    results.json, and every tweet sent gets exactly one result."""
     tweets = tmp_path / "tweets"
     tweets.mkdir()
     ids = [str(1000 + i) for i in range(6)]
@@ -527,10 +527,10 @@ def test_stream_job_async_transport(tmp_path):
     printed = int(r.stdout.split("results=")[1].split()[0])
     with open(out / "results.json") as f:
         results = [json.loads(ln) for ln in f if ln.strip()]
-    assert printed == len(results)
+    assert printed == len(results) == len(ids), r.stdout[-2000:]
     got = [res["payload"]["status"]["id"] for res in results]
     assert len(got) == len(set(got)), "duplicate result for some tweet"
-    assert set(got) <= set(ids)
+    assert sorted(got) == ids
 
 
 def test_stream_dump_job_golden_file(tmp_path):

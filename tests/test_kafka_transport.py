@@ -319,11 +319,13 @@ def test_repartitioned_replay_of_uncommitted_epoch_restages(tmp_path):
     begin_epoch discards it wholesale, so a replay that packs the batch into
     DIFFERENT partitions produces exactly the rerun's content once (the
     repartitioned-replay hole per-name dedup could not close)."""
+    from bigtwine_streamprocessor_spark.streaming import transport
+
     kt._PRODUCER_CACHE.clear()
     topic, spool = _staged_topic(tmp_path)
     # first attempt: two partitions' worth staged, then crash (no commit)
     topic.begin_epoch("q2-e3")
-    kt.dir_line_writer(topic._topic_stage(), "q2-e3")(_Rows(["a", "b"]))
+    transport.dir_line_writer(topic._topic_stage(), "q2-e3")(_Rows(["a", "b"]))
     assert _spool_lines(spool, "t") == []
     # rerun repartitions: one partition, overlapping-but-different content
     topic.begin_epoch("q2-e3")

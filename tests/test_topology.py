@@ -240,3 +240,55 @@ def test_dead_simulator_names_its_request_file(tmp_path):
         RuntimeError, match=r"service simulator ner died: .*bad\.json.*JSONDecodeError"
     ):
         topology.TopologyRun([], [sim], {}).check()
+
+
+
+def _idle_query(rows, ago_s, busy=False, state_rows=0):
+    """StreamingQuery stand-in between triggers: its last batch read
+    ``rows`` rows and ended ``ago_s`` seconds ago."""
+    import datetime
+    import time
+    from types import SimpleNamespace
+
+    start = datetime.datetime.fromtimestamp(
+        time.time() - ago_s - 1, datetime.timezone.utc
+    )
+    lp = {
+        "batchId": 3,
+        "numInputRows": rows,
+        "timestamp": start.isoformat(),
+        "durationMs": {"triggerExecution": 1000},
+        "stateOperators": [{"numRowsTotal": state_rows}],
+    }
+    status = {"isTriggerActive": busy, "isDataAvailable": busy}
+    return SimpleNamespace(
+        isActive=True, lastProgress=lp, recentProgress=[lp], status=status
+    )
+
+
+def test_idle_topology_stops_short_and_describes_itself(tmp_path):
+    """wait_results(idle_s=...) gives up once no query has read input for
+    idle_s, but not while a query is busy on data or holds fan-in state;
+    describe() names each hop's last batch and each topic's file count."""
+    import time
+
+    from bigtwine_streamprocessor_spark.streaming import transport
+
+    results = transport.FileTopic(str(tmp_path), "results")
+    results.append_lines(["r1", "r2"])
+    run = topology.TopologyRun(
+        [_idle_query(6, 0.0), _idle_query(0, 0.0)], [], {"results": results}
+    )
+    t = time.time()
+    assert run.wait_results(6, timeout_s=30, idle_s=1.0) == 2
+    assert 1.0 <= time.time() - t < 10
+    text = run.describe()
+    assert "q1: batch 3, 6 rows in, last input" in text
+    assert "q2: batch 3, 0 rows in, last input never" in text
+    assert "topic results: 1 files" in text
+
+    for busy in (_idle_query(0, 60, busy=True), _idle_query(0, 60, state_rows=4)):
+        run = topology.TopologyRun([busy], [], {"results": results})
+        t = time.time()
+        assert run.wait_results(6, timeout_s=2.0, idle_s=0.5) == 2
+        assert time.time() - t >= 2.0, "a busy query must hold the wait"

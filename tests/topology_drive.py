@@ -46,11 +46,11 @@ def write_feed(spark, batch, indir, files=1):
 def wait_results(run, n, timeout_s):
     """The result lines of ``run`` once at least ``n`` landed. A dead query
     or simulator fails the wait at once, named by ``run.check()``; a
-    timeout fails with the count reached."""
+    timeout fails with the count reached and where each hop stands."""
     got = run.wait_results(n, timeout_s)
     assert got >= n, (
         f"expected {n} results, got {got} after {timeout_s} s "
-        "with every query and simulator alive"
+        f"with every query and simulator alive:\n{run.describe()}"
     )
     return run.topics["results"].read_all()
 
