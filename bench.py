@@ -43,17 +43,13 @@ def steady_estimate(
     promotes an epoch's results with one dir rename), so the completion
     series is a step function and any WALL-CLOCK sub-window boundary cuts
     mid-plateau: a window that happens to end just before a promotion
-    under-counts by a whole epoch (the r9 official capacity record read
-    band_frac 0.224 with halves 976 vs 1221/s — ramp quantization, not
-    drift). Align everything to the STEP POINTS (the commit timestamps as
-    the sampler observed them): the slope runs first-step..last-step, and
-    the two halves split at a step index, so every window begins and ends
-    exactly at an epoch promotion and burst packing cancels out of the
-    rate. Steps are extracted from the FULL sample series before the
-    warm-threshold cut (advisor r11 fix): seeding with the first
-    over-threshold sample unconditionally kept a mid-plateau repeat
-    observation as the left endpoint, inflating the window and biasing the
-    slope low by a sampler-phase-dependent amount.
+    under-counts by a whole epoch. Align everything to the STEP POINTS (the
+    commit timestamps as the sampler observed them): the slope runs
+    first-step..last-step, and the two halves split at a step index, so
+    every window begins and ends exactly at an epoch promotion and burst
+    packing cancels out of the rate. Steps are extracted from the FULL
+    sample series before the warm-threshold cut, so a mid-plateau repeat
+    observation never becomes the left endpoint.
 
     ``consistency`` is the fraction of sub-window rates within +/-20% of
     the slope rate — 1.0 means every sub-window agrees with the headline
@@ -139,21 +135,13 @@ def bench_topology(
         base = parse_tweets(
             corpus.tweets_df(spark, stream_sf_dir), skip_retweets=True
         )
-        # replay amplification: x80 copies under distinct ids — batches must
-        # carry enough rows that the steady rate measures per-batch CAPACITY
-        # of the hops, not the feed's drip latency (470-row total corpus ->
-        # ~60-row batches -> a number dominated by 1 s trigger waits). x40
-        # (r5, was x20) stretched the steady region to ~40 s; x80 (r6)
-        # doubles it to ~80 s so each of the 5 sub-windows averages ~16
-        # trigger spurts — at x40 the fan-in completion bursts still swung
-        # sub-window rates 376-910 tweets/s (band_frac 0.91), too wide to
-        # detect a real round-over-round regression.
+        # replay amplification: enough rows per batch that the steady rate measures hop capacity
         parsed = replay_feed(base, amplify).cache()
         n = parsed.count()
         indir = os.path.join(root, "in")
         # many small files -> a continuous stream of micro-batches rather
         # than one giant batch followed by idle triggers (x80 corpus -> 256
-        # files keeps ~1175 rows/trigger, same per-trigger load as r5)
+        # files keeps ~1175 rows/trigger)
         parsed.repartition(n_files).write.json(indir)
         if shuffle_partitions is not None:
             # fresh checkpoints per run, so the stateful-op partition count
@@ -189,14 +177,8 @@ def bench_topology(
             elapsed = time.perf_counter() - t0
         parsed.unpersist()
 
-        # steady region: first sample at >= 25% completed -> last sample.
-        # The headline steady rate is the SLOPE over the whole region:
-        # throughput through the 6-hop topology genuinely oscillates
-        # trigger-to-trigger (fan-in completions land in bursts), so any
-        # sub-window sample swings 2x run-to-run (r5 measured 279-734
-        # tweets/s sub-windows within ONE run); the ~40 s full-region slope
-        # averages the oscillation and is the round-over-round comparable
-        # number. Sub-window rates stay as the variance diagnostic.
+        # steady region: first sample at >= 25% completed -> last sample;
+        # the slope over it averages the fan-in's completion bursts
         steady_rate, steady_window, sub_rates, band, consistency = (
             steady_estimate(samples, n, warm_frac)
         )
@@ -222,59 +204,22 @@ def bench_topology(
         shutil.rmtree(root, ignore_errors=True)
 
 
-# Load gate for the OFFICIAL record (r8 verdict task 2; tightened r11 per
-# verdict task 3): the r7/r8 official runs started under heavy external load
-# (load1 4.76 / 7.13) and the r9/r10 ones landed at 1.43/1.47 — under the
-# old <1.5 bar but contended enough to manufacture a ~16-query phantom
-# regression list of sub-second entries each round. The bench now waits for
-# a genuinely idle window (load1 < 0.5) first; if that never arrives within
-# the budget it falls back to the old <1.5 bar, and only past THAT does the
-# run proceed stamped "loaded": true. The recorded load1 makes every record
-# self-identifying either way. Sub-second entries additionally take the min
-# of 2 passes (see _MIN2_THRESHOLD_S) so a single scheduler hiccup cannot
-# read as a regression.
+# Load gate: contended starts manufacture phantom regressions; past MAX the record says "loaded"
 LOAD1_IDLE_TARGET = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD1_TARGET", "0.5"))
 LOAD1_IDLE_MAX = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD1_MAX", "1.5"))
 LOAD_WAIT_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT_S", "600"))
-# 8 s covers the whole phantom-regression band observed across r9-r12
-# records: at matched idle load the 72-entry TOTAL is stable to 0.1% while
-# individual 2-4.5 s entries still swing 1.2-1.4x run-to-run; one retry per
-# such entry (~1 min across the suite) converts that swing into a stable
-# min. The r11->r12 threshold raise (5 -> 8) closes a borderline artifact:
-# the session's FIRST neel_assembled execution pays ~3.5 s of one-time
-# plan/codegen cost and straddled the old 5 s bar — r11's first pass read
-# 4.92 s (under -> retried -> 1.5 s recorded) while r12's read 5.07 s
-# (over -> recorded raw), manufacturing a 3.6x phantom on an unchanged
-# plan (warm run 1.43 vs 1.46 s, verified against the r11 tree). Entries
-# >= 8 s (topology, the 1M-key soaks) are long enough to be
-# self-averaging; dedup_incremental's decomposed composite times its own
-# parts and is unaffected.
+# entries under 8 s swing 1.2-1.4x run to run, so they take the min of 2 passes
 _MIN2_THRESHOLD_S = float(os.environ.get("SPARK_GRAFT_BENCH_MIN2_S", "8.0"))
 
 
-# --- host-contention calibration probe (r11 verdict task 2) -----------------
-#
-# Three same-day idle-gated r11 runs spanned 163.8/176.0/251.4 s with clean
-# guest telemetry: the load1 gate sees THIS guest's runnable queue, not the
-# host's, so co-tenant contention inflated whole sweeps invisibly. The probe
-# is a fixed pure-CPU Spark job (codegen'd xxhash64 chain over a generated
-# range — zero I/O, zero shuffle beyond the final 64-row aggregate, fully
-# parallel over local[N]) run in the SAME session immediately before and
-# after the timed sweep. Its wall time moves only with CPU availability, so
-# probe_s / CALIB_REFERENCE_S is a direct contention multiplier for the
-# surrounding entries: ratio ~1.0 on both probes = the sweep is an engine
-# number; uniformly inflated probes = environment, read per-query deltas
-# against the calibration-normalized total (PERF.md r12 protocol).
+# --- host-contention probe: a fixed pure-CPU job that load1 (guest-only) cannot stand in for
 
 CALIB_ROWS = 800_000_000
 CALIB_PARTITIONS = 64
 _CALIB_CHAIN = "id"
 for _ in range(12):
     _CALIB_CHAIN = f"xxhash64({_CALIB_CHAIN})"
-# reference median of the probe (r12, best-available window at load1 2.6
-# guest-side: samples 2.31-2.38 across two probes; lowest repeatable
-# median). The ratio probe_s / CALIB_REFERENCE_S is the contention
-# multiplier; re-pin only from a lower repeatable median, never higher.
+# lowest repeatable probe median; re-pin only from a lower one, never higher
 CALIB_REFERENCE_S = 2.35
 
 
@@ -299,26 +244,11 @@ def calibration_probe(spark) -> dict:
     }
 
 
-# --- scheduling/IO calibration probe (r12 verdict task 5) -------------------
-#
-# The pure-CPU probe held ~1.0 across r12 runs while streaming entries moved
-# 13-21% and the dedup LSH family drifted 25-30% round-over-round with NO
-# code change (round-13 tree A/B, PERF.md) — contention in the stage-launch /
-# scheduler / shuffle-file / micro-batch-trigger dimension is invisible to a
-# single-stage compute job. This probe is that dimension, isolated: a fixed
-# backlog of tiny json files drained through a real Structured Streaming
-# query at maxFilesPerTrigger=1, each micro-batch running a small shuffle
-# (groupBy over 8 keys) — SCHED_FILES triggers x 2 stages of sub-ms tasks,
-# so wall time is almost entirely fixed per-trigger/per-stage/per-shuffle
-# overhead. Paired before/after like the CPU probe: flat sched probes + a
-# moved entry = engine; uniformly inflated sched probes = environment, read
-# the many-short-stage entries (LSH dedup, streaming) against sched_ratio.
+# --- scheduling/IO probe: per-trigger/stage/shuffle overhead, which the CPU probe cannot see
 
 SCHED_FILES = 16
 SCHED_ROWS_PER_FILE = 100
-# reference median (r13, idle box, load1 0.5: five consecutive warmed
-# probes read medians 3.67/3.68/3.79/3.99/4.44 -> lowest repeatable
-# 3.67). Re-pin only from a lower repeatable median, never higher.
+# lowest repeatable probe median; re-pin only from a lower one, never higher
 SCHED_REFERENCE_S = 3.67
 
 
@@ -413,10 +343,7 @@ def main() -> None:
 
     # warm up the JVM/codegen paths so query timings measure the engine
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # prime the OS page cache over EVERY input table (17 MB at sf0.1 —
-    # milliseconds), so the first-touched entries don't absorb whatever
-    # cold-read state the machine is in (the r10 agg_pricing_summary
-    # "regression" was exactly this: first entry in the loop, cold scan)
+    # prime the page cache over every input table, so the first entries don't time cold reads
     for fn in sorted(os.listdir(sf_dir)):
         if fn.endswith(".parquet"):
             p = os.path.join(sf_dir, fn)
@@ -452,12 +379,9 @@ def main() -> None:
     subtimings: dict[str, dict] = {}
 
     def _timed(run) -> float:
-        """Time run(); sub-second-ish entries take the MIN of 2 passes
-        (r10 verdict task 3): at these durations a single scheduler hiccup
-        or page-cache miss reads as a 1.2-1.6x 'regression', and two
-        consecutive official records manufactured a 16-entry phantom list
-        that way. The min of two passes is the engine cost; the retry adds
-        under a second per affected entry."""
+        """Time run(); entries under _MIN2_THRESHOLD_S take the MIN of 2
+        passes, since one scheduler hiccup or page-cache miss reads as a
+        1.2-1.6x regression at these durations."""
         t0 = time.perf_counter()
         run()
         t = time.perf_counter() - t0
@@ -518,13 +442,7 @@ def main() -> None:
             timings[name] = _timed(_semantic_keep)
             continue
         if name == "dedup_incremental":
-            # Decomposed (r9 verdict task 2): the gate composite is
-            # build-the-index + O(delta) scan; the total is the honest
-            # ingest->index->serve cost, but the SCAN half is what a
-            # steady-state deployment pays per batch — record both. The
-            # build/scan thunks come from the SAME helper the gate callable
-            # runs (registry.dedup_incremental_parts) so the timed path and
-            # the oracle-gated path cannot drift apart (advisor r10).
+            # build + O(delta) scan, timed apart through the gate's own helper
             build, scan = registry.dedup_incremental_parts(spark, sf_dir)
             t0 = time.perf_counter()
             build()
@@ -565,15 +483,7 @@ def main() -> None:
     try:
         streaming = bench_topology(spark, stream_sf)
         timings["topology_stream"] = streaming["elapsed_s"]
-        # Streaming regression band (PERF.md round-10 refresh): the r9 band
-        # was 440-600/s under the wall-clock sub-window estimator; the r10
-        # step-aligned estimator (slopes over epoch-commit points) reads
-        # ~5-10% higher because it no longer cuts promotion bursts at
-        # window boundaries — 7 samples under it landed 540-639/s at
-        # consistency 1.0 (plus the 508.3 first post-fix check). Band is
-        # now 500-650/s; floor raised 400 -> 450. A single sub-450 reading
-        # that load1 can't explain is a real regression signal (the pre-r9
-        # 1-in-3 slow mode stays retired). Warn-level so the run records.
+        # below the 450/s floor (band 500-650/s) is a regression unless load1 explains it
         if 0 < streaming.get("steady_tweets_per_s", 0) < 450:
             streaming["below_450_floor"] = True
             print(
@@ -587,16 +497,10 @@ def main() -> None:
     except Exception as exc:  # still emit the JSON line on a streaming crash
         streaming = {"error": f"{type(exc).__name__}: {exc}"[:500]}
 
-    # CAPACITY mode (r7 scaling-curve point promoted to the official record):
-    # 32 files/trigger + 2x shuffle partitions — same topology, batches sized
-    # for throughput instead of trigger latency (r7 measured 4,521-5,786
-    # tweets/s here vs ~550/s in the 8-file latency mode above). Runs LAST so
-    # the shuffle-partition override can't leak into any timed entry.
+    # CAPACITY mode runs LAST so its shuffle-partition override leaks into no timed entry
     try:
         cap_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions")) * 2
-        # x240/768 files -> 24 epochs of 32 files (the x80/256 feed gave
-        # capacity mode only 8 epochs: the run was all ramp, consistency 0.0
-        # in every record). Same ~4,700 rows/trigger as before.
+        # x240/768 files -> 24 epochs of 32 files (~4,700 rows/trigger); fewer epochs are all ramp
         streaming_cap = bench_topology(
             spark,
             stream_sf,
@@ -606,23 +510,12 @@ def main() -> None:
             n_files=768,
         )
         streaming_cap["shuffle_partitions"] = cap_shuffle
-        # Capacity mode's comparable number is the ONE-SHOT plateau
-        # (877/844/833 across r8-r9 records; r10 step-aligned reruns 913/857):
-        # even with the estimator aligned to epoch-commit steps, a 24-epoch
-        # run's half-window slopes swing up to 50% run-to-run (epoch
-        # durations vary with GC/burst packing), so the steady slope fails
-        # its own band check more often than not. The steady fields stay in
-        # BENCH_DETAIL as variance diagnostics; the compact record carries
-        # only the one-shot plateau (r9 verdict task 5).
+        # 24-epoch half-window slopes swing up to 50%, so the one-shot plateau is the headline
         streaming_cap["steady_note"] = (
             "diagnostic only — capacity headline is the one-shot plateau"
             " (tweets_per_s); steady slope is epoch-quantized at 24 epochs"
         )
-        # KNEE run (r13 verdict task 4): the r13 trigger sweep put the
-        # small-state knee at maxFilesPerTrigger=64 (~7,000 tweets/s steady
-        # vs 668/s one-shot at trigger 32) — the number a cluster sizing
-        # extrapolates from. Record the knee config alongside the
-        # trigger-32 run (kept for round-over-round continuity).
+        # KNEE run: the small-state knee (64 files/trigger) a cluster sizing extrapolates from
         cap_knee = bench_topology(
             spark,
             stream_sf,
@@ -645,10 +538,7 @@ def main() -> None:
     calib_after = calibration_probe(spark)
     sched_after = scheduling_probe(spark)
 
-    # Append the probe medians to a PERMANENT per-run series (r13 verdict
-    # task 1: the SCHED_REFERENCE_S pin was taken on a box that had already
-    # drifted, so the ratio alone can't see pre-pin drift — the archived
-    # series is the auditable record a future adjudication diffs against).
+    # permanent per-run probe series: a reference pin cannot show drift from before it was taken
     hist_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "SCHED_HISTORY.jsonl"
     )
@@ -678,16 +568,7 @@ def main() -> None:
     sched_mult = round(
         (sched_before["ratio"] + sched_after["ratio"]) / 2, 3
     )
-    # Per-query calibrated values (r14 verdict task 2): the box's scheduling
-    # dimension swings 0.92-1.52x BETWEEN records while the CPU probe stays
-    # near 1.0, and two consecutive PERF comparisons painted untouched
-    # sub-second queries as regressed by exactly that swing. First-order
-    # correction: divide every entry by the mean of this run's two probe
-    # multipliers (CPU + scheduling — short entries are mostly stage-launch
-    # overhead, long ones mostly compute, so the blend under-corrects both
-    # rather than over-correcting either). Additions-only: the raw block is
-    # unchanged and stays the primary record; compare queries_calibrated
-    # across rounds before flagging a regression.
+    # CPU + scheduling blend: short entries are mostly stage launch, long ones mostly compute
     query_mult = round((calib_mult + sched_mult) / 2, 3)
     queries_calibrated = (
         {k: round(v / query_mult, 3) for k, v in timings.items()}
@@ -695,11 +576,7 @@ def main() -> None:
         else {}
     )
 
-    # Full per-query detail goes to a separate artifact (and an EARLIER
-    # stdout line): the driver captures only the last ~2000 chars of output,
-    # and r5's 3.5 kB all-inclusive final line truncated mid-JSON and failed
-    # to parse (BENCH_r05.json parsed: null). The final line itself stays
-    # compact (headline subset + steady + streaming headline, ~1 kB).
+    # full detail goes to a separate artifact: only the last ~2000 chars of output are captured
     detail = {
         "metric": "headline_queries_total_wall_detail",
         "value": total,
@@ -730,9 +607,7 @@ def main() -> None:
     )
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=2, sort_keys=True)
-    # pointer only — printing the full detail JSON here left a truncated
-    # fragment inside the driver's ~2000-char output-tail capture (the
-    # stale mid-record blob in BENCH_r13.json's "tail"; r13 verdict task 8)
+    # pointer only: the full detail here would leave a truncated fragment in the output tail
     print(
         json.dumps({"metric": "detail_written", "path": detail_path,
                     "n_queries": len(timings)}),
@@ -800,8 +675,7 @@ def main() -> None:
             for k in HEADLINE + ["topology_stream"]
             if k in timings
         },
-        # per-entry calibrated twins of "queries" (r14 verdict task 2);
-        # additions-only — the raw block above is unchanged
+        # per-entry calibrated twins of "queries"; the raw block above is unchanged
         "queries_calibrated": {
             k: queries_calibrated[k]
             for k in HEADLINE + ["topology_stream"]
@@ -832,11 +706,7 @@ def main() -> None:
         compact.pop(drop, None)
         line = json.dumps(compact)
 
-    # The driver parses the LAST line of combined output. Spark's JVM logs to
-    # stderr asynchronously (executor-thread stack traces on streaming stop
-    # landed AFTER the JSON line in r4 and broke the parse), so: stop Spark
-    # first, give the JVM a moment to flush its final log lines, then print
-    # the JSON as the absolute last output.
+    # the JVM logs to stderr asynchronously and the LAST line is parsed: stop Spark, then print
     spark.stop()
     sys.stderr.flush()
     sys.stdout.flush()

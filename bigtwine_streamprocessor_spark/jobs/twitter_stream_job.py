@@ -26,9 +26,11 @@ import sys
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fragments import build_fragments, finalize_results
 from ..operators.parse import parse_tweets
+from ..schemas import NEEL_PROCESSED_TWEET
 from ..session import get_spark
 from ..sources.dataset import read_dataset_tsv
 from ..streaming import fanin
@@ -36,6 +38,13 @@ from ..streaming.progress import ProgressHeartbeatListener, run_until_idle
 
 DEFAULT_STREAM_TIMEOUT_S = 15  # `Constants.java:30`
 DEFAULT_DATASET_TIMEOUT_S = 30  # `Constants.java:33`
+# one line of the async topology's results topic
+Q6_RESULT = T.StructType(
+    [
+        T.StructField("payload", NEEL_PROCESSED_TWEET),
+        T.StructField("is_partial", T.BooleanType()),
+    ]
+)
 
 
 def _result_events(final: DataFrame, analysis_id: str) -> DataFrame:
@@ -189,8 +198,13 @@ def run(argv: list[str] | None = None) -> None:
         idle_s = timeout_s + 2 * args.trigger_seconds
         with topo:
             topo.wait_results(expected, idle_s=idle_s)
-            lines = topo.topics["results"].read_all()
-            stopped_at = topo.describe() if len(lines) < expected else None
+            results = topo.topics["results"].read_all()
+            stopped_at = topo.describe() if len(results) < expected else None
+        # q6 lines are {"payload", "is_partial"}; the job writes the same
+        # result events as the other modes
+        final = spark.createDataFrame([(r,) for r in results], "value STRING")
+        final = final.select(F.from_json("value", Q6_RESULT).alias("r")).select("r.*")
+        lines = [r.value for r in _result_events(final, args.analysis_id).collect()]
         os.makedirs(args.output_path, exist_ok=True)
         with open(os.path.join(args.output_path, "results.json"), "w") as f:
             f.write("\n".join(lines) + ("\n" if lines else ""))

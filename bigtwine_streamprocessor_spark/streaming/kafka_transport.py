@@ -1,24 +1,26 @@
 """Kafka twin of the FileTopic transport — deployment is a config switch.
 
-The topology touches topics through exactly four methods (``append_lines``,
-``line_writer``, ``envelope_writer``, ``read_stream``); this module provides
-the Kafka implementation of that contract, mirroring the reference's producer
-/consumer wiring (`TwitterStreamJob.java:227-246`, topics `Constants.java:
-15-25`). Executor-side writes go through ``foreachPartition`` closures that
-hold only (bootstrap, topic, factory) — picklable — and reuse one producer
-per executor process via a process-local cache (creating a producer per
-partition per micro-batch is the classic throughput killer).
+The topology touches topics through three methods (``line_writer``,
+``envelope_writer``, ``read_stream``) and the epoch lifecycle
+(``epoch_committed``, ``begin_epoch``, ``staged_partition_count``,
+``commit_epoch``); this module provides the Kafka implementation of that
+contract, mirroring the reference's producer/consumer wiring
+(`TwitterStreamJob.java:227-246`, topics `Constants.java:15-25`).
 
-Epoch publishes carry the SAME exactly-once stage-then-promote contract as
-the file transport (see ``KafkaTopic`` — staged sends land under a shared
-``stage_root`` and only ``commit_epoch`` produces), so a topology swapped
-onto Kafka keeps its replay guarantee instead of silently degrading to
-at-least-once (r9 verdict task 4).
+Every write stages: executor-side ``foreachPartition`` writers land their
+partition's lines under a shared ``stage_root`` and produce nothing, and the
+driver's ``commit_epoch`` is the only produce — one Kafka transaction per
+query epoch carrying the staged lines plus a marker record, so a topology
+swapped onto Kafka keeps the file transport's exactly-once replay (see
+``KafkaTopic``).
 
 No broker ships in this sandbox, so:
 
-* unit tests inject a fake producer factory (the closures, caching, and
-  staged-epoch replay dedup are fully exercised);
+* unit tests inject a fake transactional factory (staged-epoch replay
+  dedup, fencing and marker recovery are fully exercised);
+* ``SpoolBackedKafkaTopic`` commits through ``SpoolTxnFactory`` into a
+  spool in FileTopic layout, so the full topology runs the commit path end
+  to end;
 * ``read_stream`` builds the standard ``format("kafka")`` source
   (construct-only here — needs the spark-sql-kafka package + a broker);
 * the end-to-end topology test skips unless ``KAFKA_BOOTSTRAP`` is set.
@@ -28,36 +30,11 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .transport import (
-    FileTopic,
-    _visible_json_files,
-    envelopes,
-    read_lines,
-)
-
-
-def default_producer_factory(bootstrap: str):
-    """kafka-python producer; import-gated (no client lib in this image)."""
-    try:
-        from kafka import KafkaProducer  # type: ignore[import-not-found]
-    except ImportError as e:  # pragma: no cover - no client lib in sandbox
-        raise ImportError(
-            "no Kafka client library available; install kafka-python or pass "
-            "a producer_factory"
-        ) from e
-    return KafkaProducer(bootstrap_servers=bootstrap, acks="all")
-
-
-# One producer per (factory identity, bootstrap) per PROCESS — executor
-# Python workers are long-lived, so foreachPartition reuses instead of
-# reconnecting. Bounded: a key-churn bug must never accumulate connections.
-_PRODUCER_CACHE: dict = {}
-_PRODUCER_CACHE_MAX = 32
+from .transport import FileTopic, _visible_json_files, read_lines
 
 
 class ProducerFenced(RuntimeError):
@@ -104,77 +81,20 @@ def default_transactional_factory(bootstrap: str, transactional_id: str):
     )
 
 
-def _factory_identity(factory) -> tuple:
-    """Stable across task deserializations (each foreachPartition task unpickles
-    a FRESH factory object, so id()/repr() would make the cache miss every
-    partition and leak one producer per task). Functions identify by qualified
-    name; instances by ``cache_key()`` when provided (REQUIRED for factory
-    classes whose instances carry different configs), else by their type."""
-    ck = getattr(factory, "cache_key", None)
-    if callable(ck):
-        return ("ck", type(factory).__module__, type(factory).__qualname__, ck())
-    return (
-        "fn",
-        getattr(factory, "__module__", type(factory).__module__),
-        getattr(factory, "__qualname__", type(factory).__qualname__),
-    )
-
-
-def _producer_for(bootstrap: str, factory):
-    key = (*_factory_identity(factory), bootstrap)
-    p = _PRODUCER_CACHE.get(key)
-    if p is not None:
-        # LRU: move the hit to the insertion-order tail so eviction (which
-        # pops the HEAD) always removes the least-recently-used producer,
-        # not the hottest one.
-        _PRODUCER_CACHE.pop(key)
-        _PRODUCER_CACHE[key] = p
-        return p
-    while len(_PRODUCER_CACHE) >= _PRODUCER_CACHE_MAX:
-        oldest = next(iter(_PRODUCER_CACHE))
-        old = _PRODUCER_CACHE.pop(oldest)
-        # drain buffered async sends before tearing down the connection —
-        # close() alone may drop them
-        flush = getattr(old, "flush", None)
-        if callable(flush):
-            flush()
-        close = getattr(old, "close", None)
-        if callable(close):
-            close()
-    p = factory(bootstrap)
-    _PRODUCER_CACHE[key] = p
-    return p
-
-
-def kafka_append(bootstrap: str, topic: str, lines: list[str], factory) -> None:
-    """Produce lines to a topic and flush (one flush per partition-batch)."""
-    if not lines:
-        return
-    producer = _producer_for(bootstrap, factory)
-    for ln in lines:
-        producer.send(topic, ln.encode("utf-8"))
-    producer.flush()
-
-
 class KafkaTopic:
     """Same contract as transport.FileTopic, over a Kafka broker.
 
-    ``exactly_once_replay`` is True (r9 verdict task 4 — previously this
-    transport degraded to at-least-once with a one-time warning): epoch
-    publishes follow the SAME stage-then-promote discipline as FileTopic,
-    through a ``FileTopic(stage_root, name)`` that is the staged-epoch store.
-    Writers given an ``fname_prefix`` buffer their partition's lines under
-    ``<stage_root>/<topic>/.staging/<epoch>/`` instead of producing
-    immediately; ``commit_epoch`` drains the staged epoch through the
-    producer in one flush and lands an atomic marker file, and
-    ``epoch_committed`` consults the marker — so a replayed epoch (however
-    Spark repartitions the rerun) either finds its marker and publishes
-    NOTHING, or discards the partial staging and re-stages from scratch.
+    Epoch publishes follow FileTopic's stage-then-promote discipline,
+    through a ``FileTopic(stage_root, name)`` that is the staged-epoch
+    store: writers buffer their partition's lines under
+    ``<stage_root>/<topic>/.staging/<epoch>/`` and produce nothing, and
+    ``commit_epoch`` produces the staged epoch and a marker record in one
+    Kafka transaction keyed by query+epoch. A replayed epoch (however Spark
+    repartitions the rerun) either finds its marker and publishes NOTHING,
+    or discards the partial staging and re-stages from scratch.
 
-    This is the transactional-producer shape realized over a shared
-    filesystem: staged sends are invisible until commit, commit is the only
-    produce. ``stage_root`` must be visible to executors and the driver and
-    survive restarts — the same storage-class requirement as the streaming
+    ``stage_root`` must be visible to executors and the driver and survive
+    restarts — the same storage-class requirement as the streaming
     checkpoint itself, which is why ``start_topology`` binds an unset
     ``stage_root`` UNDER the topology's checkpoint root (``<root>/
     _kafka_stage``). There is deliberately no ambient default: a stable
@@ -183,35 +103,27 @@ class KafkaTopic:
     find a previous run's commit markers, report ``epoch_committed`` and
     publish NOTHING (silent loss), and on a multi-node cluster a node-local
     default hid executor-staged files from the committing driver. Staged
-    operations now fail loudly until ``stage_root`` is set (constructor /
+    operations fail loudly until ``stage_root`` is set (constructor /
     ``bind_stage_root``); ``bind_stage_root(fresh_checkpoint=True)`` purges
-    the topic's stage state so restarted epoch numbering can never meet a
-    stale marker. Without a ``transactional_factory`` the remaining window
-    is a crash INSIDE ``commit_epoch`` between the producer flush and the
-    marker rename, which replays the one epoch; WITH one, the drain and a
-    marker record commit in a single Kafka transaction keyed by
-    query+epoch and even that window closes (see ``commit_epoch``)."""
+    the topic's stage state, run id included (see ``_run_id``), so
+    restarted epoch numbering can never meet a stale marker file or record.
 
-    exactly_once_replay = True
+    ``transactional_factory(bootstrap, transactional_id)`` builds the
+    producer of one commit (see ``default_transactional_factory`` for the
+    contract)."""
 
     def __init__(
         self,
         bootstrap: str,
         name: str,
-        producer_factory=None,
         stage_root: str | None = None,
-        transactional_factory=None,
+        transactional_factory=default_transactional_factory,
     ):
         self.bootstrap = bootstrap
         self.name = name
-        self._factory = producer_factory or default_producer_factory
         self.stage_root = stage_root
         self._stage_topic: FileTopic | None = None  # see _stage()
-        # Optional transactional commit path (r11 verdict task 1): when set,
-        # commit_epoch wraps the staged drain + a marker RECORD in one Kafka
-        # transaction keyed by query+epoch and the marker FILE becomes a
-        # cache — see commit_epoch. None keeps the flush-then-marker path
-        # with its pinned one-epoch at-least-once window.
+        self._run: str | None = None  # see _run_id()
         self._txn_factory = transactional_factory
 
     # ---- staged-epoch layout ----------------------------------------------
@@ -247,6 +159,7 @@ class KafkaTopic:
             stage_root
         ):
             shutil.rmtree(self._topic_stage(), ignore_errors=True)
+            self._run = None
             return
         stale = _visible_json_files(os.path.join(self._topic_stage(), "_committed"))
         if stale:
@@ -288,15 +201,34 @@ class KafkaTopic:
     def _marker(self, prefix: str) -> str:
         return os.path.join(self._topic_stage(), "_committed", f"{prefix}.json")
 
-    def append_lines(self, lines: list[str]) -> None:
-        kafka_append(self.bootstrap, self.name, lines, self._factory)
+    def _run_id(self) -> str:
+        """Identity of this stage's epoch numbering, kept in ``<stage>/_run``
+        and renewed by the fresh-checkpoint purge. Marker records carry it:
+        a dead run's records stay in the marker topic (no purge reaches a
+        broker), and must not match a restarted run's ``q1-e0``."""
+        if self._run is None:
+            path = os.path.join(self._topic_stage(), "_run")
+            if not os.path.exists(path):
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+                with open(tmp, "w") as f:
+                    f.write(uuid.uuid4().hex)
+                try:
+                    os.link(tmp, path)  # the first writer wins
+                except FileExistsError:
+                    pass
+                finally:
+                    os.remove(tmp)
+            with open(path) as f:
+                self._run = f.read()
+        return self._run
 
     # ---- epoch lifecycle (driver side, inside foreachBatch) ---------------
 
     def marker_topic(self) -> str:
         """Per-topic control topic carrying one marker record per committed
-        epoch (transactional path only — the record commits atomically with
-        the epoch's data records)."""
+        epoch (the record commits atomically with the epoch's data
+        records)."""
         return f"{self.name}.epoch-markers"
 
     def _txn_id(self, prefix: str) -> str:
@@ -305,21 +237,19 @@ class KafkaTopic:
     def epoch_committed(self, prefix: str) -> bool:
         if os.path.exists(self._marker(prefix)):
             return True
-        # transactional path: the marker file is only a CACHE — a crash
-        # after commit_transaction but before the file landed must not
-        # re-produce, so consult the read-committed marker stream when the
-        # factory provides one
-        if self._txn_factory is not None:
-            reader = getattr(self._txn_factory, "committed_markers", None)
-            if callable(reader):
-                for raw in reader(self.bootstrap, self.marker_topic()):
-                    try:
-                        rec = json.loads(raw)
-                    except (TypeError, ValueError):
-                        continue
-                    if rec.get("epoch") == prefix:
-                        self._cache_marker(prefix, rec)
-                        return True
+        # the marker file is only a CACHE — a crash after commit_transaction
+        # but before the file landed must not re-produce, so consult the
+        # read-committed marker stream when the factory provides one
+        reader = getattr(self._txn_factory, "committed_markers", None)
+        if callable(reader):
+            for raw in reader(self.bootstrap, self.marker_topic()):
+                try:
+                    rec = json.loads(raw)
+                except (TypeError, ValueError):
+                    continue
+                if rec.get("epoch") == prefix and rec.get("run") == self._run_id():
+                    self._cache_marker(prefix, rec)
+                    return True
         return False
 
     def _cache_marker(self, prefix: str, payload: dict) -> None:
@@ -344,21 +274,17 @@ class KafkaTopic:
         return self._stage().staged_partition_count(prefix)
 
     def commit_epoch(self, prefix: str) -> None:
-        """Drain the staged epoch and commit it. An epoch that staged
+        """Produce the staged epoch and commit it. An epoch that staged
         nothing still commits (an empty marker) so its replay is skipped —
         FileTopic parity. (The guard against "staged nothing because the
         stage is on storage the driver can't see" lives in
         ``topology._epoch_publish``, which knows the executor-side truth
         via an accumulator.)
 
-        Without a ``transactional_factory`` the path is flush-then-marker:
-        the crash window BETWEEN them replays exactly one epoch
-        (at-least-once for that epoch, pinned by test — never lost).
-
-        With one (r11 verdict task 1), the drain and a marker RECORD on
-        ``marker_topic()`` commit in ONE Kafka transaction whose
-        ``transactional.id`` is query+epoch (the results-producer contract,
-        `TwitterStreamJob.java:353-376`, made atomic):
+        The staged lines and a marker RECORD on ``marker_topic()`` commit in
+        ONE Kafka transaction whose ``transactional.id`` is query+epoch (the
+        results-producer contract, `TwitterStreamJob.java:353-376`, made
+        atomic):
 
         * crash between send and commit_transaction → the transaction is
           never committed; a replay's ``init_transactions`` aborts it, so
@@ -366,7 +292,7 @@ class KafkaTopic:
           and the re-produce lands exactly once;
         * a FENCED producer (a newer instance took the same id) treats its
           commit attempt as a no-op — the newer instance owns the epoch;
-        * the marker FILE is demoted to a cache of the marker record;
+        * the marker FILE is a cache of the marker record;
           ``epoch_committed`` falls back to the factory's read-committed
           ``committed_markers`` reader, closing even the crash between
           commit_transaction and the cache write.
@@ -377,81 +303,50 @@ class KafkaTopic:
         if self.epoch_committed(prefix):
             return
         lines = self._stage().staged_lines(prefix)
-        payload = {"epoch": prefix, "lines": len(lines)}
-        if self._txn_factory is None:
-            kafka_append(self.bootstrap, self.name, lines, self._factory)
-        else:
-            # per-epoch transactional.id: one-shot producer, never cached
-            p = self._txn_factory(self.bootstrap, self._txn_id(prefix))
+        payload = {"epoch": prefix, "run": self._run_id(), "lines": len(lines)}
+        # per-epoch transactional.id: one-shot producer
+        p = self._txn_factory(self.bootstrap, self._txn_id(prefix))
+        try:
+            p.init_transactions()
+            p.begin_transaction()
+            for ln in lines:
+                p.send(self.name, ln.encode("utf-8"))
+            p.send(self.marker_topic(), json.dumps(payload).encode("utf-8"))
+            p.commit_transaction()
+        except Exception as e:
+            if _is_fenced(e):
+                # the newer instance commits (or aborts) this epoch;
+                # leave staging/markers for it — our attempt is void
+                return
             try:
-                p.init_transactions()
-                p.begin_transaction()
-                for ln in lines:
-                    p.send(self.name, ln.encode("utf-8"))
-                p.send(
-                    self.marker_topic(), json.dumps(payload).encode("utf-8")
-                )
-                p.commit_transaction()
-            except Exception as e:
-                if _is_fenced(e):
-                    # the newer instance commits (or aborts) this epoch;
-                    # leave staging/markers for it — our attempt is void
-                    return
-                try:
-                    p.abort_transaction()
-                except Exception:
-                    pass
-                raise
-            finally:
-                close = getattr(p, "close", None)
-                if callable(close):
-                    close()
+                p.abort_transaction()
+            except Exception:
+                pass
+            raise
+        finally:
+            close = getattr(p, "close", None)
+            if callable(close):
+                close()
         self._cache_marker(prefix, payload)
         self._stage().begin_epoch(prefix)  # drop the drained staging
 
     # ---- writers (executor side, picklable) --------------------------------
 
-    def line_writer(self, fname_prefix: str | None = None):
+    def line_writer(self, fname_prefix: str):
         """Picklable foreachPartition sink: rows with a ``value`` column.
+        The partition STAGES its lines for ``commit_epoch`` under the
+        query+epoch ``fname_prefix`` — the same ``.staging/<epoch>/p<id>``
+        discipline as the file transport (the writer is the stage topic's
+        own)."""
+        return self._stage().line_writer(fname_prefix)
 
-        With ``fname_prefix`` (query+epoch) the partition STAGES its lines
-        for ``commit_epoch`` — the same ``.staging/<epoch>/p<id>`` discipline
-        as the file transport (the writer is the stage topic's own). Without a
-        prefix the write produces immediately (fire-and-forget paths).
-        Downstream semantics of duplicates, were the commit window ever
-        hit: a replayed epoch's status fragments are absorbed by the
-        fan-in's last-write-wins; entity fragments concat (the reference's
-        own duplicate semantics,
-        `NeelProcessedTweetWindowFunction.java:57-61`)."""
-        if fname_prefix is not None:
-            return self._stage().line_writer(fname_prefix)
-        bootstrap, name, factory = self.bootstrap, self.name, self._factory
-
-        def write(rows) -> None:
-            kafka_append(bootstrap, name, [r["value"] for r in rows], factory)
-
-        return write
-
-    def envelope_writer(
-        self,
-        out_topic: str,
-        chunk: int | None = None,
-        fname_prefix: str | None = None,
-    ):
+    def envelope_writer(self, out_topic: str, chunk: int | None, fname_prefix: str):
         """Picklable foreachPartition sink: rows with an ``item`` JSON column
-        -> one request envelope per partition (or per ``chunk`` items).
-        With ``fname_prefix``, envelopes stage for ``commit_epoch`` exactly
-        like ``line_writer`` (envelopes carry a fresh requestId per attempt,
-        so epoch-level — not content-level — dedup is what keeps a replayed
-        request batch single-shot)."""
-        if fname_prefix is not None:
-            return self._stage().envelope_writer(out_topic, chunk, fname_prefix)
-        bootstrap, name, factory = self.bootstrap, self.name, self._factory
-
-        def write(rows) -> None:
-            kafka_append(bootstrap, name, envelopes(rows, out_topic, chunk), factory)
-
-        return write
+        -> one request envelope per partition (or per ``chunk`` items),
+        staged for ``commit_epoch`` like ``line_writer`` (envelopes carry a
+        fresh requestId per attempt, so epoch-level — not content-level —
+        dedup is what keeps a replayed request batch single-shot)."""
+        return self._stage().envelope_writer(out_topic, chunk, fname_prefix)
 
     def read_stream(self, spark: SparkSession) -> DataFrame:
         """Structured Streaming Kafka source exposing the same one-column
@@ -466,92 +361,8 @@ class KafkaTopic:
         )
 
 
-class SpoolProducer:
-    """Producer writing each flush to ``spool/<topic>/`` as atomic json-line
-    files — the broker-less stand-in (degrades KafkaTopic to FileTopic
-    behavior for dev and for exercising the producer path in tests).
-
-    Thread-safety + per-batch idempotence (r14): this producer is CACHED and
-    SHARED by every driver-side ``commit_epoch`` thread (one instance per
-    spool dir per process), and the r13-era shape — iterate the shared
-    buffer, write, then clear — had two windows a real, thread-safe Kafka
-    producer does not: (a) two concurrent flushes could write the same
-    buffered records twice before either cleared (observed in the wild as
-    byte-identical duplicate request files, same requestId, which the
-    fan-in then faithfully CONCATs into a batch-golden mismatch), and
-    (b) an interrupt between write and clear re-flushed the stale buffer
-    later. Now ``flush`` TAKES the buffer as a sequenced batch under a
-    lock and delivers each pending batch to deterministic per-(producer,
-    seq) file names, so a re-delivery of the same batch lands on the same
-    name and dedups (the stand-in's analog of Kafka's idempotent-producer
-    sequence numbers) and a batch is forgotten only after every topic's
-    file is on disk (no loss). Cross-PROCESS replays of an uncommitted
-    epoch still re-stage fresh content under a fresh producer token —
-    the documented at-least-once window of the non-transactional path is
-    unchanged (pinned in test_crash_inside_commit_window_replays_one_epoch).
-    """
-
-    def __init__(self, spool: str):
-        self.spool = spool
-        self._lock = threading.Lock()
-        self._token = uuid.uuid4().hex[:12]
-        self._seq = 0
-        self._buf: list[tuple[str, str]] = []
-        # sequenced batches taken from _buf but not yet fully on disk
-        self._pending: list[tuple[int, list[tuple[str, str]]]] = []
-
-    def send(self, topic: str, value: bytes) -> None:
-        with self._lock:
-            self._buf.append((topic, value.decode("utf-8")))
-
-    def flush(self) -> None:
-        # looked up per call: tests interpose on transport.append_lines_to_dir
-        from .transport import append_lines_to_dir
-
-        with self._lock:
-            if self._buf:
-                self._pending.append((self._seq, self._buf))
-                self._seq += 1
-                self._buf = []
-            pending = list(self._pending)
-        for seq, batch in pending:
-            by_topic: dict[str, list[str]] = {}
-            for t, v in batch:
-                by_topic.setdefault(t, []).append(v)
-            for t, lines in by_topic.items():
-                d = os.path.join(self.spool, t)
-                os.makedirs(d, exist_ok=True)
-                # deterministic name: a re-delivery (concurrent flush or a
-                # retry after an interrupt) lands on the same file and is
-                # skipped by the atomic-name dedup
-                append_lines_to_dir(
-                    d, lines, fname=f"{os.getpid()}-{self._token}-s{seq:08d}"
-                )
-            with self._lock:
-                try:
-                    self._pending.remove((seq, batch))
-                except ValueError:
-                    pass  # a concurrent flush already delivered it
-
-
-class SpoolProducerFactory:
-    """Picklable factory for SpoolProducer (executor-side construction)."""
-
-    def __init__(self, spool: str):
-        self.spool = spool
-
-    def __call__(self, bootstrap: str) -> SpoolProducer:
-        return SpoolProducer(self.spool)
-
-    def cache_key(self) -> tuple:
-        """Config-bearing identity so two factories with different spool dirs
-        never share a producer, while re-unpickled copies of the SAME factory
-        hit the same cache slot."""
-        return (self.spool,)
-
-
 class SpoolTxnProducer:
-    """Transactional twin of SpoolProducer: sends buffer invisibly until
+    """Broker-less transactional producer: sends buffer invisibly until
     ``commit_transaction`` lands them into the spool's FileTopic layout —
     the visibility contract a Kafka transaction gives read-committed
     consumers, realized over the shared filesystem. No fencing state: the
@@ -621,30 +432,23 @@ class SpoolTxnFactory:
 
 
 class SpoolBackedKafkaTopic(KafkaTopic):
-    """Broker-less KafkaTopic for dev and end-to-end tests: the PRODUCER
-    path runs exactly as against a real broker (staged epochs, marker-
-    gated commits, process-cached producers, envelope chunking), but the
-    "broker" is a ``SpoolProducer`` landing each flush as atomic json
-    files under ``<root>/<name>/`` — FileTopic's on-disk layout — so the
-    read side (``read_stream``, service simulators polling ``.dir``) is
-    the file transport. The full async topology can therefore drive the
-    Kafka producer path end-to-end without a broker
-    (``test_kafka_transport.py::test_full_topology_over_kafka_producer_path``);
+    """Broker-less KafkaTopic for dev and end-to-end tests: the commit path
+    runs exactly as against a real broker (staged epochs, one transaction
+    per epoch with its marker record, marker-stream recovery, envelope
+    chunking), but the "broker" is a ``SpoolTxnFactory`` landing each
+    committed transaction as atomic json files under ``<root>/<name>/`` —
+    FileTopic's on-disk layout — so the read side (``read_stream``, service
+    simulators polling ``.dir``) is the file transport. The full async
+    topology therefore drives the Kafka commit path end-to-end without a
+    broker (``test_kafka_transport.py::test_full_topology_over_kafka_commits``);
     only ``format("kafka")`` consumption still needs the real thing."""
 
-    def __init__(
-        self,
-        root: str,
-        name: str,
-        stage_root: str | None = None,
-        transactional: bool = False,
-    ):
+    def __init__(self, root: str, name: str, stage_root: str | None = None):
         super().__init__(
             f"spool:{root}",
             name,
-            producer_factory=SpoolProducerFactory(root),
             stage_root=stage_root,
-            transactional_factory=SpoolTxnFactory(root) if transactional else None,
+            transactional_factory=SpoolTxnFactory(root),
         )
         self._file = FileTopic(root, name)
         self.dir = self._file.dir
@@ -659,22 +463,19 @@ class SpoolBackedKafkaTopic(KafkaTopic):
 def make_kafka_topics(
     bootstrap: str,
     names: list[str],
-    producer_factory=None,
     stage_root: str | None = None,
-    transactional_factory=None,
+    transactional_factory=default_transactional_factory,
 ) -> dict[str, KafkaTopic]:
     """Build the topology's topic dict. ``stage_root`` (driver+executor-
     shared storage) namespaces every topic's staged-epoch state; leave it
     None to let ``start_topology`` bind it under the topology's checkpoint
-    root, which carries the right storage class by construction. Pass
-    ``transactional_factory`` (e.g. ``default_transactional_factory``) to
-    commit epochs through Kafka transactions — true exactly-once across
-    every crash window (see ``KafkaTopic.commit_epoch``)."""
+    root, which carries the right storage class by construction. Every
+    epoch commits through a ``transactional_factory`` producer (see
+    ``KafkaTopic.commit_epoch``)."""
     return {
         n: KafkaTopic(
             bootstrap,
             n,
-            producer_factory,
             stage_root=stage_root,
             transactional_factory=transactional_factory,
         )

@@ -11,9 +11,8 @@ topology as N concurrent Structured Streaming queries connected by **topics**.
 ``FileTopic`` is the broker stand-in for this environment (no Kafka broker is
 available): a directory of atomically-renamed JSON-line files, readable as a
 file stream. The engine-side topology is broker-agnostic — on a real cluster
-swap ``FileTopic.read_stream`` for ``spark.readStream.format("kafka")`` and
-the ``append_lines`` calls inside ``foreachBatch`` for a Kafka producer; every
-transform in between is unchanged.
+pass ``kafka_transport.make_kafka_topics(bootstrap, TOPIC_NAMES)`` as the
+topology's topics; every transform in between is unchanged.
 
 Scale note: everything row-proportional (fragment lines, request items,
 response-envelope parsing, result lines) is built with DataFrame expressions
@@ -87,13 +86,11 @@ def append_lines_to_dir(
     os.replace(tmp, target)
 
 
-def _partition_fname(fname_prefix: str | None) -> str | None:
+def _partition_fname(fname_prefix: str) -> str:
     """Deterministic per-partition STAGING subpath (inside a Spark task):
     ``.staging/<prefix>/p<id>``. Stable within one attempt (task retries and
     speculative twins collapse onto one name); the whole staged epoch is
     promoted atomically by the driver after the action completes."""
-    if fname_prefix is None:
-        return None
     from pyspark import TaskContext
 
     tc = TaskContext.get()
@@ -101,11 +98,10 @@ def _partition_fname(fname_prefix: str | None) -> str | None:
     return f"{STAGING}/{fname_prefix}/p{pid}"
 
 
-def dir_line_writer(topic_dir: str, fname_prefix: str | None = None):
-    """foreachPartition sink: rows with a ``value`` column -> topic lines.
-    The Kafka twin is ``KafkaTopic.line_writer`` (same contract).
-    ``fname_prefix`` (e.g. ``q3-e17``) makes epoch replays idempotent —
-    see ``append_lines_to_dir``."""
+def dir_line_writer(topic_dir: str, fname_prefix: str):
+    """foreachPartition sink: rows with a ``value`` column -> lines staged
+    under the query+epoch ``fname_prefix`` (e.g. ``q3-e17``), which makes
+    epoch replays idempotent — see ``append_lines_to_dir``."""
 
     def write(rows) -> None:
         append_lines_to_dir(
@@ -118,16 +114,13 @@ def dir_line_writer(topic_dir: str, fname_prefix: str | None = None):
 
 
 def dir_envelope_writer(
-    topic_dir: str,
-    out_topic: str,
-    chunk: int | None = None,
-    fname_prefix: str | None = None,
+    topic_dir: str, out_topic: str, chunk: int | None, fname_prefix: str
 ):
     """foreachPartition sink: rows with an ``item`` JSON column -> request
-    envelopes (see ``envelopes``). ``fname_prefix`` dedupes
-    epoch replays by publish name (envelopes carry a fresh requestId per
-    attempt, so name-level — not content-level — dedup is what keeps a
-    replayed request batch single-shot)."""
+    envelopes (see ``envelopes``) staged under ``fname_prefix``, which
+    dedupes epoch replays by publish name (envelopes carry a fresh
+    requestId per attempt, so name-level — not content-level — dedup is
+    what keeps a replayed request batch single-shot)."""
 
     def write(rows) -> None:
         append_lines_to_dir(
@@ -177,33 +170,21 @@ class FileTopic:
     (``commit_epoch``). A replayed epoch either finds its committed dir
     (skip — nothing republished, regardless of how the replay repartitions
     the batch) or a partial staging dir (discarded and rewritten — no
-    reader ever saw it). ``exactly_once_replay`` advertises the guarantee
-    so a topology can log what its transport actually provides (the Kafka
-    twin stages to a shared spool and produces only on commit — same
-    guarantee; see ``KafkaTopic``)."""
-
-    exactly_once_replay = True
+    reader ever saw it). The Kafka twin stages the same way and produces
+    only on commit — same guarantee; see ``KafkaTopic``."""
 
     def __init__(self, root: str, name: str):
         self.name = name
         self.dir = os.path.join(root, name)
         os.makedirs(self.dir, exist_ok=True)
 
-    def append_lines(self, lines: list[str]) -> None:
-        append_lines_to_dir(self.dir, lines)
-
-    def line_writer(self, fname_prefix: str | None = None):
+    def line_writer(self, fname_prefix: str):
         """Picklable executor-side writer (captures only the dir path).
         ``fname_prefix`` (unique per query+epoch) stages the partition
         files for ``commit_epoch`` — see ``append_lines_to_dir``."""
         return dir_line_writer(self.dir, fname_prefix)
 
-    def envelope_writer(
-        self,
-        out_topic: str,
-        chunk: int | None = None,
-        fname_prefix: str | None = None,
-    ):
+    def envelope_writer(self, out_topic: str, chunk: int | None, fname_prefix: str):
         return dir_envelope_writer(self.dir, out_topic, chunk, fname_prefix)
 
     # ---- epoch lifecycle (driver side, inside foreachBatch) --------------

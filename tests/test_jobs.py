@@ -493,7 +493,9 @@ def test_curate_resume_invalidates_on_content_change(spark, sf_dir, tmp_path):
 def test_stream_job_async_transport(tmp_path):
     """``--mode stream --transport async`` runs the full async topology and
     tears it down: the job exits 0, ``results=`` counts the lines of
-    results.json, and every tweet sent gets exactly one result."""
+    results.json, every tweet sent gets exactly one result, and the lines
+    are the same result events as the other modes write, so the export
+    job reads them."""
     tweets = tmp_path / "tweets"
     tweets.mkdir()
     ids = [str(1000 + i) for i in range(6)]
@@ -531,6 +533,20 @@ def test_stream_job_async_transport(tmp_path):
     got = [res["payload"]["status"]["id"] for res in results]
     assert len(got) == len(set(got)), "duplicate result for some tweet"
     assert sorted(got) == ids
+    assert all(res["analysisId"] == "a-async" for res in results)
+    assert all(res["processDate"] for res in results)
+
+    tsv = tmp_path / "tsv"
+    r = _run(
+        "bigtwine_streamprocessor_spark.jobs.export_results_job",
+        "--job-id", "e-async", "--analysis-id", "a-async",
+        "--input-path", str(out), "--output-path", str(tsv), "--format", "tsv",
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    (part,) = glob.glob(f"{tsv}/part-*.csv")
+    rows = open(part).read().splitlines()[1:]
+    assert sorted({row.split("\t")[0] for row in rows}) == ids, rows
+    assert len(rows) >= len(ids)
 
 
 def test_stream_dump_job_golden_file(tmp_path):

@@ -1,6 +1,7 @@
-"""Kafka transport seam: the producer path (executor-side foreachPartition
-closures, process-local producer cache, envelope chunking) exercised with an
-injected fake producer; the real-broker topology run skips without one."""
+"""Kafka transport seam: the one commit path (executor-side staging,
+``commit_epoch`` producing each epoch in one transaction with its marker
+record) exercised with spool and fake-broker transactional factories; the
+real-broker topology run skips without one."""
 
 import json
 import os
@@ -8,6 +9,7 @@ import os
 import pytest
 
 from bigtwine_streamprocessor_spark.streaming import kafka_transport as kt
+from bigtwine_streamprocessor_spark.streaming.transport import read_lines
 from tests.topology_drive import (
     assert_matches_batch,
     parsed_batch,
@@ -16,205 +18,20 @@ from tests.topology_drive import (
 )
 
 
-class CountingFactory:
-    calls = 0
-
-    def __call__(self, bootstrap):
-        CountingFactory.calls += 1
-        return kt.SpoolProducer("/tmp/unused-spool")
-
-
-def _spool_lines(spool, topic):
-    d = os.path.join(spool, topic)
-    out = []
-    if not os.path.isdir(d):
-        return out
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".json"):
-            with open(os.path.join(d, fn)) as f:
-                out += [ln for ln in f.read().splitlines() if ln.strip()]
-    return out
-
-
-def test_producer_cache_reuses_per_process(tmp_path):
-    CountingFactory.calls = 0
-    factory = CountingFactory()
-    kt._PRODUCER_CACHE.clear()
-    kt.kafka_append("b:9092", "t", ["a"], factory)
-    kt.kafka_append("b:9092", "t", ["b"], factory)
-    assert CountingFactory.calls == 1, "same process must reuse the producer"
-
-
-def test_producer_cache_stable_across_unpickled_factories(tmp_path):
-    """Each foreachPartition task unpickles a FRESH factory instance; the
-    cache key must survive that (repr()/id() would miss every time and leak a
-    producer per partition-task), while factories with different configs must
-    NOT share a producer."""
-    import pickle
-
-    kt._PRODUCER_CACHE.clear()
-    f1 = kt.SpoolProducerFactory(str(tmp_path / "s1"))
-    f1_copy = pickle.loads(pickle.dumps(f1))  # what an executor task sees
-    f2 = kt.SpoolProducerFactory(str(tmp_path / "s2"))
-    p1 = kt._producer_for("b:9092", f1)
-    assert kt._producer_for("b:9092", f1_copy) is p1, "same config -> same slot"
-    assert kt._producer_for("b:9092", f2) is not p1, "configs must not collide"
-    assert len(kt._PRODUCER_CACHE) == 2
-
-
-def test_producer_cache_bounded(tmp_path):
-    kt._PRODUCER_CACHE.clear()
-    for i in range(kt._PRODUCER_CACHE_MAX + 8):
-        kt._producer_for("b:9092", kt.SpoolProducerFactory(str(tmp_path / f"s{i}")))
-    assert len(kt._PRODUCER_CACHE) <= kt._PRODUCER_CACHE_MAX
-
-
-def test_producer_cache_evicts_lru_and_flushes(tmp_path):
-    """Eviction under key churn must drop the LEAST-recently-used producer
-    (a recently-hit hot producer survives), and evicted producers are
-    flushed before close so buffered async sends are not lost."""
-
-    events = []
-
-    class Probe:
-        def __init__(self, name):
-            self.name = name
-
-        def flush(self):
-            events.append(("flush", self.name))
-
-        def close(self):
-            events.append(("close", self.name))
-
-    class ProbeFactory:
-        def __init__(self, name):
-            self.name = name
-
-        def cache_key(self):
-            return self.name
-
-        def __call__(self, bootstrap):
-            return Probe(self.name)
-
-    kt._PRODUCER_CACHE.clear()
-    factories = [ProbeFactory(f"p{i}") for i in range(kt._PRODUCER_CACHE_MAX)]
-    for f in factories:
-        kt._producer_for("b:9092", f)
-    # touch p0 — it becomes most-recently-used, so the next eviction must
-    # take p1 (the oldest untouched), NOT p0
-    kt._producer_for("b:9092", factories[0])
-    kt._producer_for("b:9092", ProbeFactory("overflow"))
-    assert events == [("flush", "p1"), ("close", "p1")]
-    live = {v.name for v in kt._PRODUCER_CACHE.values()}
-    assert "p0" in live and "p1" not in live
-    kt._PRODUCER_CACHE.clear()
-
-
-def test_spool_producer_concurrent_send_flush_exactly_once(tmp_path):
-    """r14 flush-race fix pin (advisor r14): many threads hammering
-    send()+flush() on the SHARED producer — the pre-fix iterate/write/clear
-    flush double-delivered byte-identical batches — must land every record
-    exactly once in the spool."""
-    import threading
-
-    spool = str(tmp_path / "spool")
-    prod = kt.SpoolProducer(spool)
-    n_threads, n_per = 8, 50
-    barrier = threading.Barrier(n_threads)
-
-    def worker(tid):
-        barrier.wait()
-        for i in range(n_per):
-            prod.send("reqs", f"t{tid}-r{i}".encode())
-            if i % 5 == tid % 5:
-                prod.flush()  # interleaved flushes race on the shared buffer
-        prod.flush()
-
-    threads = [
-        threading.Thread(target=worker, args=(t,)) for t in range(n_threads)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    prod.flush()
-    got = _spool_lines(spool, "reqs")
-    want = [f"t{t}-r{i}" for t in range(n_threads) for i in range(n_per)]
-    assert sorted(got) == sorted(want), (
-        f"{len(got)} delivered vs {len(want)} sent "
-        f"(dups={len(got) - len(set(got))})"
+def _topic(tmp_path, name="t", factory=None, stage_root=None):
+    """KafkaTopic staging under ``tmp_path/stage`` (or ``stage_root``) whose
+    commits go through ``factory`` — by default a SpoolTxnFactory landing
+    them under ``tmp_path/spool`` (read back with ``_spool_lines``)."""
+    return kt.KafkaTopic(
+        "fake:9092",
+        name,
+        stage_root=stage_root or str(tmp_path / "stage"),
+        transactional_factory=factory or kt.SpoolTxnFactory(str(tmp_path / "spool")),
     )
-    assert not prod._pending and not prod._buf
 
 
-def test_spool_producer_interrupted_delivery_retries_without_loss_or_dup(
-    tmp_path, monkeypatch
-):
-    """A crash BETWEEN a batch's topic writes (first topic on disk, second
-    not) must leave the batch pending; the retry flush re-delivers onto the
-    same per-(producer, seq) names so the already-landed topic dedups and
-    the missing one lands — exactly-once content per batch."""
-    from bigtwine_streamprocessor_spark.streaming import transport
-
-    spool = str(tmp_path / "spool")
-    prod = kt.SpoolProducer(spool)
-    prod.send("topic-a", b"a1")
-    prod.send("topic-b", b"b1")
-
-    real_append = transport.append_lines_to_dir
-    calls = {"n": 0}
-
-    def crash_on_second(*args, **kwargs):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated crash between topic writes")
-        return real_append(*args, **kwargs)
-
-    monkeypatch.setattr(transport, "append_lines_to_dir", crash_on_second)
-    with pytest.raises(OSError):
-        prod.flush()
-    assert len(prod._pending) == 1, "interrupted batch must stay pending"
-    monkeypatch.setattr(transport, "append_lines_to_dir", real_append)
-
-    prod.flush()  # retry: topic-a dedups on its name, topic-b lands
-    assert _spool_lines(spool, "topic-a") == ["a1"]
-    assert _spool_lines(spool, "topic-b") == ["b1"]
-    assert not prod._pending
-
-
-def test_line_writer_through_foreachpartition(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    topic = kt.KafkaTopic("b:9092", "results", kt.SpoolProducerFactory(spool))
-    df = spark.range(50).selectExpr("concat('line-', id) AS value")
-    df.foreachPartition(topic.line_writer())
-    lines = _spool_lines(spool, "results")
-    assert sorted(lines) == sorted(f"line-{i}" for i in range(50))
-
-
-def test_envelope_writer_chunks_and_wraps(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    topic = kt.KafkaTopic("b:9092", "geo-req", kt.SpoolProducerFactory(spool))
-    df = (
-        spark.range(7)
-        .coalesce(1)
-        .selectExpr("to_json(struct(cast(id AS string) AS tag)) AS item")
-    )
-    df.foreachPartition(topic.envelope_writer("geo-resp.a1", chunk=3))
-    envs = [json.loads(ln) for ln in _spool_lines(spool, "geo-req")]
-    assert len(envs) == 3  # 3 + 3 + 1
-    assert all(e["outputTopic"] == "geo-resp.a1" for e in envs)
-    assert all("requestId" in e and "expiration" in e for e in envs)
-    tags = sorted(it["tag"] for e in envs for it in e["items"])
-    assert tags == sorted(str(i) for i in range(7))
-    assert max(len(e["items"]) for e in envs) <= 3
-
-
-def test_append_lines_driver_side(tmp_path):
-    spool = str(tmp_path / "spool")
-    kt._PRODUCER_CACHE.clear()
-    topic = kt.KafkaTopic("b:9092", "frag", kt.SpoolProducerFactory(spool))
-    topic.append_lines(["x", "y"])
-    assert sorted(_spool_lines(spool, "frag")) == ["x", "y"]
+def _spool_lines(tmp_path, topic):
+    return read_lines(str(tmp_path / "spool" / topic))
 
 
 @pytest.mark.skipif(
@@ -240,17 +57,6 @@ def test_topology_runs_on_kafka(spark, sf_dir, tmp_path):
     ).stop()
 
 
-def _staged_topic(tmp_path, name="t"):
-    spool = str(tmp_path / "spool")
-    topic = kt.KafkaTopic(
-        "fake:9092",
-        name,
-        producer_factory=kt.SpoolProducerFactory(spool),
-        stage_root=str(tmp_path / "stage"),
-    )
-    return topic, spool
-
-
 class _Rows:
     """Minimal foreachPartition-shaped iterable of {'value': ...} rows."""
 
@@ -266,52 +72,48 @@ def test_staged_epoch_through_foreachpartition(spark, tmp_path):
     processes in local mode): partitions stage via the shared filesystem,
     the driver's commit_epoch drains them — nothing reaches the producer
     until then, across process boundaries."""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path, name="results")
+    topic = _topic(tmp_path, name="results")
     df = spark.range(40).repartition(4).selectExpr("concat('v-', id) AS value")
     topic.begin_epoch("q1-e0")
     df.foreachPartition(topic.line_writer(fname_prefix="q1-e0"))
-    assert _spool_lines(spool, "results") == []
+    assert _spool_lines(tmp_path, "results") == []
     topic.commit_epoch("q1-e0")
-    assert sorted(_spool_lines(spool, "results")) == sorted(
+    assert sorted(_spool_lines(tmp_path, "results")) == sorted(
         f"v-{i}" for i in range(40)
     )
     # replayed epoch (repartitioned): epoch_committed short-circuits
     assert topic.epoch_committed("q1-e0") is True
     topic.commit_epoch("q1-e0")
-    assert len(_spool_lines(spool, "results")) == 40
+    assert len(_spool_lines(tmp_path, "results")) == 40
 
 
 def test_staged_epoch_invisible_until_commit(tmp_path):
     """Staged writes produce NOTHING; commit_epoch is the only produce
     (transactional-producer shape, r9 verdict task 4)."""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path)
-    assert topic.exactly_once_replay is True
+    topic = _topic(tmp_path)
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["a", "b"]))
-    assert _spool_lines(spool, "t") == [], "staged lines leaked to the broker"
+    assert _spool_lines(tmp_path, "t") == [], "staged lines leaked to the broker"
     assert topic.epoch_committed("q1-e0") is False
     topic.commit_epoch("q1-e0")
     assert topic.epoch_committed("q1-e0") is True
-    assert sorted(_spool_lines(spool, "t")) == ["a", "b"]
+    assert sorted(_spool_lines(tmp_path, "t")) == ["a", "b"]
 
 
 def test_committed_epoch_replay_produces_zero_duplicates(tmp_path):
     """A replayed committed epoch — even one whose rerun repartitions the
     batch — publishes nothing: epoch_committed short-circuits the topology's
     _epoch_publish, and a manual re-commit is a no-op."""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path)
+    topic = _topic(tmp_path)
     topic.begin_epoch("q1-e7")
     topic.line_writer(fname_prefix="q1-e7")(_Rows(["x", "y", "z"]))
     topic.commit_epoch("q1-e7")
-    assert sorted(_spool_lines(spool, "t")) == ["x", "y", "z"]
+    assert sorted(_spool_lines(tmp_path, "t")) == ["x", "y", "z"]
     # replay: the topology checks epoch_committed first and skips wholesale
     assert topic.epoch_committed("q1-e7") is True
     # even a defensive direct re-commit must not re-produce
     topic.commit_epoch("q1-e7")
-    assert sorted(_spool_lines(spool, "t")) == ["x", "y", "z"]
+    assert sorted(_spool_lines(tmp_path, "t")) == ["x", "y", "z"]
 
 
 def test_repartitioned_replay_of_uncommitted_epoch_restages(tmp_path):
@@ -321,33 +123,34 @@ def test_repartitioned_replay_of_uncommitted_epoch_restages(tmp_path):
     repartitioned-replay hole per-name dedup could not close)."""
     from bigtwine_streamprocessor_spark.streaming import transport
 
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path)
+    topic = _topic(tmp_path)
     # first attempt: two partitions' worth staged, then crash (no commit)
     topic.begin_epoch("q2-e3")
     transport.dir_line_writer(topic._topic_stage(), "q2-e3")(_Rows(["a", "b"]))
-    assert _spool_lines(spool, "t") == []
+    assert _spool_lines(tmp_path, "t") == []
     # rerun repartitions: one partition, overlapping-but-different content
     topic.begin_epoch("q2-e3")
     topic.line_writer(fname_prefix="q2-e3")(_Rows(["a", "b", "c"]))
     topic.commit_epoch("q2-e3")
-    assert sorted(_spool_lines(spool, "t")) == ["a", "b", "c"]
+    assert sorted(_spool_lines(tmp_path, "t")) == ["a", "b", "c"]
 
 
 def test_staged_envelope_writer_and_empty_epoch_marker(tmp_path):
     """Envelope staging rides the same discipline; an epoch that staged
     nothing still commits an empty marker so its replay is skipped."""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path, name="geo-req")
+    topic = _topic(tmp_path, name="geo-req")
     topic.begin_epoch("q3-e0")
     rows = [{"item": json.dumps({"tag": str(i)})} for i in range(5)]
     topic.envelope_writer("geo-resp.a1", chunk=3, fname_prefix="q3-e0")(
         iter(rows)
     )
-    assert _spool_lines(spool, "geo-req") == []
+    assert _spool_lines(tmp_path, "geo-req") == []
     topic.commit_epoch("q3-e0")
-    envs = [json.loads(ln) for ln in _spool_lines(spool, "geo-req")]
+    envs = [json.loads(ln) for ln in _spool_lines(tmp_path, "geo-req")]
     assert len(envs) == 2  # 3 + 2
+    assert all(e["outputTopic"] == "geo-resp.a1" for e in envs)
+    assert all("requestId" in e and "expiration" in e for e in envs)
+    assert max(len(e["items"]) for e in envs) <= 3
     assert sorted(it["tag"] for e in envs for it in e["items"]) == [
         str(i) for i in range(5)
     ]
@@ -355,37 +158,26 @@ def test_staged_envelope_writer_and_empty_epoch_marker(tmp_path):
     topic.begin_epoch("q3-e1")
     topic.commit_epoch("q3-e1")
     assert topic.epoch_committed("q3-e1") is True
-    assert len(_spool_lines(spool, "geo-req")) == 2
+    assert len(_spool_lines(tmp_path, "geo-req")) == 2
 
 
 def test_staged_ops_require_stage_root(tmp_path):
     """No implicit stage_root (advisor r10, high): a stable /tmp default
     keyed by bootstrap let a fresh-checkpoint run (epoch ids restarting at
     q1-e0) meet a previous run's markers and silently publish nothing.
-    Staged-epoch operations must fail loudly until a root is bound;
-    fire-and-forget paths never need one."""
-    spool = str(tmp_path / "spool")
-    kt._PRODUCER_CACHE.clear()
-    topic = kt.KafkaTopic("b:9092", "t", kt.SpoolProducerFactory(spool))
+    Staged-epoch operations must fail loudly until a root is bound."""
+    topic = kt.KafkaTopic("b:9092", "t")
     with pytest.raises(RuntimeError, match="stage_root"):
         topic.epoch_committed("q1-e0")
     with pytest.raises(RuntimeError, match="stage_root"):
         topic.line_writer(fname_prefix="q1-e0")
-    # fire-and-forget still works without any stage state
-    topic.append_lines(["ok"])
-    assert _spool_lines(spool, "t") == ["ok"]
 
 
 def test_bind_stage_root_adopts_and_respects_explicit(tmp_path):
-    explicit = kt.KafkaTopic(
-        "b:9092", "t", kt.SpoolProducerFactory(str(tmp_path / "s")),
-        stage_root=str(tmp_path / "mine"),
-    )
+    explicit = kt.KafkaTopic("b:9092", "t", stage_root=str(tmp_path / "mine"))
     explicit.bind_stage_root(str(tmp_path / "theirs"))
     assert explicit.stage_root == str(tmp_path / "mine")
-    unset = kt.KafkaTopic(
-        "b:9092", "t", kt.SpoolProducerFactory(str(tmp_path / "s"))
-    )
+    unset = kt.KafkaTopic("b:9092", "t")
     unset.bind_stage_root(str(tmp_path / "theirs"))
     assert unset.stage_root == str(tmp_path / "theirs")
 
@@ -394,20 +186,21 @@ def test_fresh_checkpoint_purges_stale_markers(tmp_path):
     """A dead run's commit markers must not survive into a run whose epoch
     numbering restarts — epoch_committed on a stale marker publishes
     NOTHING for the new epoch (silent loss)."""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path, name="results")
+    topic = _topic(tmp_path, name="results")
     # previous run committed q1-e0
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["old"]))
     topic.commit_epoch("q1-e0")
     assert topic.epoch_committed("q1-e0") is True
-    # new run, fresh checkpoint: same stage_root, epoch ids restart
+    # new run, fresh checkpoint: same stage_root, epoch ids restart; the
+    # dead run's marker RECORD stays in the marker topic and must not match
+    assert _spool_lines(tmp_path, topic.marker_topic())
     topic.bind_stage_root(topic.stage_root, fresh_checkpoint=True)
     assert topic.epoch_committed("q1-e0") is False
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["new"]))
     topic.commit_epoch("q1-e0")
-    assert "new" in _spool_lines(spool, "results")
+    assert "new" in _spool_lines(tmp_path, "results")
 
 
 def test_bind_stage_roots_namespaces_under_topology_root(tmp_path):
@@ -416,16 +209,15 @@ def test_bind_stage_roots_namespaces_under_topology_root(tmp_path):
     purge), a missing one means fresh (purge)."""
     from bigtwine_streamprocessor_spark.streaming import topology
 
-    spool = str(tmp_path / "spool")
     root = str(tmp_path / "run")
     topics = kt.make_kafka_topics(
-        "b:9092", ["a", "b"], kt.SpoolProducerFactory(spool)
+        "b:9092", ["a", "b"],
+        transactional_factory=kt.SpoolTxnFactory(str(tmp_path / "spool")),
     )
     topology.bind_stage_roots(topics, root)
     for t in topics.values():
         assert t.stage_root == os.path.join(root, "_kafka_stage")
     # resume case: _chk exists -> a committed marker SURVIVES rebinding
-    kt._PRODUCER_CACHE.clear()
     topics["a"].begin_epoch("q1-e0")
     topics["a"].commit_epoch("q1-e0")
     os.makedirs(os.path.join(root, "_chk"))
@@ -440,14 +232,13 @@ def test_epoch_publish_cross_checks_driver_visibility(spark, tmp_path):
     marker that drops the epoch forever."""
     from bigtwine_streamprocessor_spark.streaming import topology
 
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path, name="results")
+    topic = _topic(tmp_path, name="results")
     df = spark.range(20).repartition(4).selectExpr("concat('v-', id) AS value")
     # healthy path: counts agree, epoch commits, lines produced once
     topology._epoch_publish(
         df, [(topic, "q9-e0", "value", "value", topic.line_writer("q9-e0"))]
     )
-    assert sorted(_spool_lines(spool, "results")) == sorted(
+    assert sorted(_spool_lines(tmp_path, "results")) == sorted(
         f"v-{i}" for i in range(20)
     )
 
@@ -460,15 +251,15 @@ def test_epoch_publish_cross_checks_driver_visibility(spark, tmp_path):
     blind = BlindTopic(
         "fake:9092",
         "results2",
-        producer_factory=kt.SpoolProducerFactory(spool),
         stage_root=str(tmp_path / "stage"),
+        transactional_factory=kt.SpoolTxnFactory(str(tmp_path / "spool")),
     )
     with pytest.raises(RuntimeError, match="shared storage"):
         topology._epoch_publish(
             df, [(blind, "q9-e1", "value", "value", blind.line_writer("q9-e1"))]
         )
     assert blind.epoch_committed("q9-e1") is False, "must not mark committed"
-    assert _spool_lines(spool, "results2") == []
+    assert _spool_lines(tmp_path, "results2") == []
 
 
 def test_fresh_checkpoint_over_published_file_epochs_refused(tmp_path):
@@ -492,17 +283,19 @@ def test_fresh_checkpoint_over_published_file_epochs_refused(tmp_path):
 
 
 @pytest.mark.slow
-def test_full_topology_over_kafka_producer_path(spark, sf_dir, tmp_path):
+def test_full_topology_over_kafka_commits(spark, sf_dir, tmp_path):
     """The broker-less Kafka e2e: the FULL async topology (6 queries + 4
     service simulators) runs with every epoch publish going through the
-    KafkaTopic producer path — staged epochs, marker-gated commit_epoch as
-    the only produce, process-cached producers — with a SpoolProducer as
-    the broker stand-in landing flushes in FileTopic layout for the read
-    side. Results must equal the in-process batch golden exactly. This is
-    the config-switch parity check the broker-gated test can't run here."""
+    KafkaTopic commit path — staged epochs, commit_epoch as the only
+    produce, one transaction per epoch with its marker record — with
+    SpoolTxnFactory as the broker stand-in landing commits in FileTopic
+    layout for the read side. Results must equal the in-process batch
+    golden exactly: the config-switch parity check the broker-gated test
+    can't run here."""
+    import shutil
+
     from bigtwine_streamprocessor_spark.streaming import topology
 
-    kt._PRODUCER_CACHE.clear()
     batch = parsed_batch(spark, sf_dir, 25)
     n = batch.count()
     stream = write_feed(spark, batch, tmp_path / "tweets_in")()
@@ -511,6 +304,7 @@ def test_full_topology_over_kafka_producer_path(spark, sf_dir, tmp_path):
         name: kt.SpoolBackedKafkaTopic(os.path.join(root, "spool"), name)
         for name in topology.TOPIC_NAMES
     }
+    assert all(isinstance(t._txn_factory, kt.SpoolTxnFactory) for t in topics.values())
     with topology.start_topology(
         spark, root, stream, "a-kspool", timeout_ms=20_000, topics=topics
     ) as run:
@@ -518,6 +312,20 @@ def test_full_topology_over_kafka_producer_path(spark, sf_dir, tmp_path):
     # stage roots were bound under the topology root (not /tmp ambient)
     assert topics["results"].stage_root == os.path.join(root, "_kafka_stage")
     assert_matches_batch(results, batch)
+    # every committed epoch also landed its marker RECORD atomically, and
+    # epoch_committed resolves from the marker stream even with the
+    # local cache wiped (the crash-before-cache-write recovery path)
+    markers = topics["results"]._txn_factory.committed_markers(
+        topics["results"].bootstrap, topics["results"].marker_topic()
+    )
+    assert markers, "transactional commits must land marker records"
+    committed = {json.loads(m)["epoch"] for m in markers}
+    some_epoch = next(iter(committed))
+    shutil.rmtree(
+        os.path.join(topics["results"]._topic_stage(), "_committed"),
+        ignore_errors=True,
+    )
+    assert topics["results"].epoch_committed(some_epoch) is True
 
 
 @pytest.mark.slow
@@ -525,7 +333,8 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
     spark, sf_dir, tmp_path
 ):
     """Hard-stop the topology mid-stream and restart it — with every epoch
-    publish going through the KafkaTopic staged-epoch path. The second
+    publish going through the KafkaTopic staged-epoch path and its
+    transactional spool commit. The second
     life's replayed epochs must find their commit MARKERS (fresh topic
     objects, same stage root bound from the same topology root) and
     publish nothing, while unfinished epochs restage and commit once: the
@@ -534,7 +343,6 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
     golden exactly."""
     from bigtwine_streamprocessor_spark.streaming import topology
 
-    kt._PRODUCER_CACHE.clear()
     batch = parsed_batch(spark, sf_dir, 30)
     n = batch.count()
     make_stream = write_feed(spark, batch, tmp_path / "tweets_in", files=6)
@@ -573,71 +381,21 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
     assert_matches_batch(results, batch)
 
 
-def test_crash_inside_commit_window_replays_one_epoch(tmp_path, monkeypatch):
-    """The documented irreducible window (commit_epoch docstring): a crash
-    BETWEEN the producer flush and the marker rename re-produces exactly
-    that one epoch on replay — at-least-once for the single epoch, never
-    lost. (A real broker closes the window with a transaction wrapping the
-    drain; downstream, duplicate status fragments are absorbed by the
-    fan-in's last-write-wins and entity fragments concat — the reference's
-    own duplicate semantics.)"""
-    kt._PRODUCER_CACHE.clear()
-    topic, spool = _staged_topic(tmp_path, name="results")
-    topic.begin_epoch("q1-e5")
-    topic.line_writer(fname_prefix="q1-e5")(_Rows(["a", "b"]))
-
-    real_replace = os.replace
-    boom = {"armed": True}
-
-    def crashing_replace(src, dst):
-        if boom["armed"] and "_committed" in dst:
-            boom["armed"] = False
-            raise OSError("simulated crash between flush and marker rename")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", crashing_replace)
-    with pytest.raises(OSError, match="simulated crash"):
-        topic.commit_epoch("q1-e5")
-    # the produce happened, the marker did not: epoch reads uncommitted
-    assert sorted(_spool_lines(spool, "results")) == ["a", "b"]
-    assert topic.epoch_committed("q1-e5") is False
-
-    # replay: begin discards stale staging, the rerun restages and commits;
-    # the window's cost is exactly one duplicated epoch, nothing lost
-    topic.begin_epoch("q1-e5")
-    topic.line_writer(fname_prefix="q1-e5")(_Rows(["a", "b"]))
-    topic.commit_epoch("q1-e5")
-    assert topic.epoch_committed("q1-e5") is True
-    assert sorted(_spool_lines(spool, "results")) == ["a", "a", "b", "b"]
-    # and a further replay is now a clean no-op
-    topic.commit_epoch("q1-e5")
-    assert sorted(_spool_lines(spool, "results")) == ["a", "a", "b", "b"]
-
-
 def test_shared_explicit_stage_root_not_purged_on_fresh_checkpoint(tmp_path):
     """advisor r11: an EXPLICIT stage_root may be shared across topologies
     (stage state is namespaced per topic name only). Topology B's fresh
     start must not rmtree topology A's in-flight staged epochs — with
     surviving commit markers under a shared root, rebinding to a DIFFERENT
     topology root refuses loudly instead of purging or silently keeping."""
-    kt._PRODUCER_CACHE.clear()
     shared = str(tmp_path / "shared_stage")
     # topology A: explicit shared root, commits an epoch + leaves staging
-    a = kt.KafkaTopic(
-        "fake:9092", "results",
-        producer_factory=kt.SpoolProducerFactory(str(tmp_path / "spool")),
-        stage_root=shared,
-    )
+    a = _topic(tmp_path, "results", stage_root=shared)
     a.begin_epoch("q1-e0")
     a.line_writer(fname_prefix="q1-e0")(_Rows(["a0"]))
     a.commit_epoch("q1-e0")
     a.line_writer(fname_prefix="q1-e1")(_Rows(["a1-inflight"]))
     # topology B: same explicit root + topic name, fresh checkpoint
-    b = kt.KafkaTopic(
-        "fake:9092", "results",
-        producer_factory=kt.SpoolProducerFactory(str(tmp_path / "spool")),
-        stage_root=shared,
-    )
+    b = _topic(tmp_path, "results", stage_root=shared)
     with pytest.raises(RuntimeError, match="unique to this topology"):
         b.bind_stage_root(
             str(tmp_path / "rootB" / "_kafka_stage"), fresh_checkpoint=True
@@ -646,11 +404,7 @@ def test_shared_explicit_stage_root_not_purged_on_fresh_checkpoint(tmp_path):
     assert a.epoch_committed("q1-e0") is True
     assert a.staged_partition_count("q1-e1") == 1
     # a clean shared root (no markers) binds fine — nothing to mistake
-    c = kt.KafkaTopic(
-        "fake:9092", "other",
-        producer_factory=kt.SpoolProducerFactory(str(tmp_path / "spool")),
-        stage_root=shared,
-    )
+    c = _topic(tmp_path, "other", stage_root=shared)
     c.bind_stage_root(
         str(tmp_path / "rootC" / "_kafka_stage"), fresh_checkpoint=True
     )
@@ -726,25 +480,15 @@ class _FakeTxnFactory:
         return [v.decode() for v in self.broker.committed.get(marker_topic, [])]
 
 
-def _txn_topic(tmp_path, broker, name="results"):
-    return kt.KafkaTopic(
-        "fake:9092",
-        name,
-        producer_factory=kt.SpoolProducerFactory(str(tmp_path / "spool")),
-        stage_root=str(tmp_path / "stage"),
-        transactional_factory=_FakeTxnFactory(broker),
-    )
-
-
 def test_txn_commit_lands_records_and_marker_atomically(tmp_path):
     broker = _TxnBroker()
-    topic = _txn_topic(tmp_path, broker)
+    topic = _topic(tmp_path, "results", _FakeTxnFactory(broker))
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["a", "b"]))
     topic.commit_epoch("q1-e0")
     assert broker.lines("results") == ["a", "b"]
     marker = json.loads(broker.committed["results.epoch-markers"][0])
-    assert marker == {"epoch": "q1-e0", "lines": 2}
+    assert marker == {"epoch": "q1-e0", "run": topic._run_id(), "lines": 2}
     assert topic.epoch_committed("q1-e0") is True
     # replay is a clean no-op (marker-file cache hit)
     topic.commit_epoch("q1-e0")
@@ -754,10 +498,9 @@ def test_txn_commit_lands_records_and_marker_atomically(tmp_path):
 def test_txn_crash_before_commit_replays_without_duplicate(tmp_path):
     """(a) A crash between send and commit_transaction leaves the
     transaction uncommitted — its records invisible — so the replay
-    re-produces with NO duplicate. This is the window the
-    non-transactional path pays with one duplicated epoch."""
+    re-produces with NO duplicate."""
     broker = _TxnBroker()
-    topic = _txn_topic(tmp_path, broker)
+    topic = _topic(tmp_path, "results", _FakeTxnFactory(broker))
     topic.begin_epoch("q1-e5")
     topic.line_writer(fname_prefix="q1-e5")(_Rows(["a", "b"]))
 
@@ -794,16 +537,11 @@ def test_txn_fenced_replay_is_noop(tmp_path):
     fenced must treat its commit as a no-op (no raise, no duplicate) —
     the winner's transaction is the only one visible."""
     broker = _TxnBroker()
-    topic = _txn_topic(tmp_path, broker)
+    topic = _topic(tmp_path, "results", _FakeTxnFactory(broker))
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["x"]))
 
-    winner = kt.KafkaTopic(
-        "fake:9092", "results",
-        producer_factory=kt.SpoolProducerFactory(str(tmp_path / "spool")),
-        stage_root=topic.stage_root,
-        transactional_factory=_FakeTxnFactory(broker),
-    )
+    winner = _topic(tmp_path, "results", _FakeTxnFactory(broker))
 
     class _InterleavedFactory(_FakeTxnFactory):
         """After the loser stages its sends, the winner replays the whole
@@ -832,7 +570,7 @@ def test_txn_marker_reader_closes_cache_write_window(tmp_path, monkeypatch):
     lands: epoch_committed consults the read-committed marker stream and
     the replay is a no-op — no duplicate even in the last window."""
     broker = _TxnBroker()
-    topic = _txn_topic(tmp_path, broker)
+    topic = _topic(tmp_path, "results", _FakeTxnFactory(broker))
     topic.begin_epoch("q1-e0")
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["a"]))
 
@@ -857,52 +595,6 @@ def test_txn_marker_reader_closes_cache_write_window(tmp_path, monkeypatch):
     topic.line_writer(fname_prefix="q1-e0")(_Rows(["a"]))
     topic.commit_epoch("q1-e0")
     assert broker.lines("results") == ["a"]
-
-
-@pytest.mark.slow
-def test_full_topology_over_transactional_commits(spark, sf_dir, tmp_path):
-    """The r12 transactional commit path, end to end: the FULL async
-    topology runs with every epoch publish committed through a
-    transactional producer (SpoolTxnFactory — atomic drain+marker flush,
-    marker-stream recovery reader), and the results equal the in-process
-    batch golden exactly. This promotes the manual r12 verification drive
-    into a standing regression: a deployment that flips
-    transactional_factory on gets the identical dataflow."""
-    from bigtwine_streamprocessor_spark.streaming import topology
-
-    kt._PRODUCER_CACHE.clear()
-    batch = parsed_batch(spark, sf_dir, 25)
-    n = batch.count()
-    stream = write_feed(spark, batch, tmp_path / "tweets_in")()
-    root = str(tmp_path / "run")
-    topics = {
-        name: kt.SpoolBackedKafkaTopic(
-            os.path.join(root, "spool"), name, transactional=True
-        )
-        for name in topology.TOPIC_NAMES
-    }
-    assert all(t._txn_factory is not None for t in topics.values())
-    with topology.start_topology(
-        spark, root, stream, "a-txn", timeout_ms=20_000, topics=topics
-    ) as run:
-        results = wait_results(run, n, 120)
-    assert_matches_batch(results, batch)
-    # every committed epoch also landed its marker RECORD atomically, and
-    # epoch_committed resolves from the marker stream even with the
-    # local cache wiped (the crash-before-cache-write recovery path)
-    markers = topics["results"]._txn_factory.committed_markers(
-        topics["results"].bootstrap, topics["results"].marker_topic()
-    )
-    assert markers, "transactional commits must land marker records"
-    committed = {json.loads(m)["epoch"] for m in markers}
-    some_epoch = next(iter(committed))
-    import shutil
-
-    shutil.rmtree(
-        os.path.join(topics["results"]._topic_stage(), "_committed"),
-        ignore_errors=True,
-    )
-    assert topics["results"].epoch_committed(some_epoch) is True
 
 
 def test_spool_txn_commit_lands_data_before_markers(tmp_path, monkeypatch):
@@ -942,13 +634,7 @@ def test_spool_txn_read_committed_never_sees_aborted_records(tmp_path):
 
     spool = str(tmp_path / "spool")
     factory = kt.SpoolTxnFactory(spool)
-    topic = kt.KafkaTopic(
-        f"spool:{spool}",
-        "results",
-        producer_factory=kt.SpoolProducerFactory(spool),
-        stage_root=str(tmp_path / "stage"),
-        transactional_factory=factory,
-    )
+    topic = _topic(tmp_path, "results", factory)
     reader = FileTopic(spool, "results")
 
     # (1) explicit abort: sends to BOTH topics buffered, then discarded

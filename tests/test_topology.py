@@ -111,13 +111,13 @@ def test_empty_epoch_commits_a_skip_marker(tmp_path):
 
 
 def test_unnamed_publish_stays_at_least_once(tmp_path):
-    """Without a name the legacy uuid path appends every call (the shape
-    service simulators rely on)."""
+    """Without a name the uuid path appends every call (the shape
+    ``SpoolTxnProducer.commit_transaction`` relies on)."""
     from bigtwine_streamprocessor_spark.streaming import transport
 
     topic = transport.FileTopic(str(tmp_path), "t")
-    topic.append_lines(["x"])
-    topic.append_lines(["x"])
+    transport.append_lines_to_dir(topic.dir, ["x"])
+    transport.append_lines_to_dir(topic.dir, ["x"])
     assert topic.read_all() == ["x", "x"]
 
 
@@ -142,7 +142,7 @@ def test_envelope_writer_replay_single_shot(tmp_path):
     from bigtwine_streamprocessor_spark.streaming import transport
 
     topic = transport.FileTopic(str(tmp_path), "reqs")
-    writer = topic.envelope_writer("reply.topic", fname_prefix="q2-e3")
+    writer = topic.envelope_writer("reply.topic", chunk=None, fname_prefix="q2-e3")
     rows = [{"item": _json.dumps({"tag": "t1", "text": "hi"})}]
     writer(iter(rows))
     writer(iter(rows))  # task retry: new requestId inside, same staged name
@@ -198,7 +198,7 @@ def test_topic_counter_matches_read_all(tmp_path):
     topic = transport.FileTopic(str(tmp_path), "t")
     counter = transport.TopicCounter(topic)
     assert counter.count() == 0
-    topic.append_lines(["a", "b"])
+    transport.append_lines_to_dir(topic.dir, ["a", "b"])
     assert counter.count() == len(topic.read_all()) == 2
     st = transport.STAGING
     transport.append_lines_to_dir(topic.dir, ["c"], fname=f"{st}/q1-e0/p0")
@@ -208,7 +208,7 @@ def test_topic_counter_matches_read_all(tmp_path):
     )  # skipped
     topic.commit_epoch("q1-e0")
     assert counter.count() == len(topic.read_all()) == 3
-    topic.append_lines(["d", "e", "f"])
+    transport.append_lines_to_dir(topic.dir, ["d", "e", "f"])
     assert counter.count() == len(topic.read_all()) == 6
     assert counter.count() == 6  # idempotent poll
 
@@ -217,8 +217,12 @@ def test_topic_counter_matches_read_all(tmp_path):
 def test_dead_simulator_names_its_request_file(tmp_path):
     """A simulator that dies on a request file records the file and the
     error, leaves that file's offset uncommitted (a restart retries it),
-    and TopologyRun.check() reports the cause."""
+    and TopologyRun.check() reports the cause. One that dies partway
+    through a file publishes nothing for it; the next life answers the
+    whole file in one response file, and the life after answers nothing."""
+    import json as _json
     import os
+    import time
 
     from bigtwine_streamprocessor_spark.streaming import transport
 
@@ -240,6 +244,60 @@ def test_dead_simulator_names_its_request_file(tmp_path):
         RuntimeError, match=r"service simulator ner died: .*bad\.json.*JSONDecodeError"
     ):
         topology.TopologyRun([], [sim], {}).check()
+
+    # ---- killed mid-file: the second of two envelopes raises ------------
+    req = transport.FileTopic(str(tmp_path / "mid"), "ner-requests")
+    resp = transport.FileTopic(str(tmp_path / "mid"), "ner-responses")
+    envs = [
+        transport.make_envelope([{"tag": "1", "text": "spark"}], "ner-responses.a"),
+        transport.make_envelope([{"tag": "2", "text": "join"}], "ner-responses.a"),
+    ]
+    transport.append_lines_to_dir(req.dir, envs, fname="two")
+    offsets = str(tmp_path / "mid" / "offsets.log")
+    calls = []
+
+    def dies_on_second(items):
+        calls.append(items)
+        if len(calls) == 2:
+            raise RuntimeError("killed mid-file")
+        return transport.ner_service(items)
+
+    def life(fn):
+        s = transport.ServiceSimulator(
+            req, resp, fn, poll_s=0.05, offsets_path=offsets
+        )
+        s.start()
+        return s
+
+    first = life(dies_on_second)
+    first.join(5)
+    assert not first.is_alive() and len(calls) == 2
+    assert "two.json" in first.error and "killed mid-file" in first.error
+    assert not os.path.exists(offsets) or "two.json" not in open(offsets).read()
+    assert transport._visible_json_files(resp.dir) == []
+
+    second = life(transport.ner_service)
+    deadline = time.time() + 10
+    while second.answered < 1 and time.time() < deadline:
+        time.sleep(0.05)
+    second.stop()
+    second.join(5)
+    assert not second.is_alive() and second.error is None
+    assert transport._visible_json_files(resp.dir) == ["r-two.json"]
+    answers = [_json.loads(ln) for ln in resp.read_all()]
+    assert [a["requestId"] for a in answers] == [
+        _json.loads(e)["requestId"] for e in envs
+    ]
+    assert [a["items"][0]["tag"] for a in answers] == ["1", "2"]
+    assert "two.json" in open(offsets).read()
+
+    third_calls = []
+    third = life(lambda items: third_calls.append(items) or [])
+    time.sleep(0.5)
+    third.stop()
+    third.join(5)
+    assert not third.is_alive() and third.error is None and third_calls == []
+    assert transport._visible_json_files(resp.dir) == ["r-two.json"]
 
 
 
@@ -275,7 +333,7 @@ def test_idle_topology_stops_short_and_describes_itself(tmp_path):
     from bigtwine_streamprocessor_spark.streaming import transport
 
     results = transport.FileTopic(str(tmp_path), "results")
-    results.append_lines(["r1", "r2"])
+    transport.append_lines_to_dir(results.dir, ["r1", "r2"])
     run = topology.TopologyRun(
         [_idle_query(6, 0.0), _idle_query(0, 0.0)], [], {"results": results}
     )
