@@ -440,7 +440,7 @@ class SpoolBackedKafkaTopic(KafkaTopic):
     FileTopic's on-disk layout — so the read side (``read_stream``, service
     simulators polling ``.dir``) is the file transport. The full async
     topology therefore drives the Kafka commit path end-to-end without a
-    broker (``test_kafka_transport.py::test_full_topology_over_kafka_commits``);
+    broker (``test_kafka_transport.py::test_full_topology_over_kafka_producer_path``);
     only ``format("kafka")`` consumption still needs the real thing."""
 
     def __init__(self, root: str, name: str, stage_root: str | None = None):

@@ -282,20 +282,17 @@ def test_fresh_checkpoint_over_published_file_epochs_refused(tmp_path):
     topology.bind_stage_roots({"results": t}, root)
 
 
-@pytest.mark.slow
-def test_full_topology_over_kafka_commits(spark, sf_dir, tmp_path):
-    """The broker-less Kafka e2e: the FULL async topology (6 queries + 4
-    service simulators) runs with every epoch publish going through the
-    KafkaTopic commit path — staged epochs, commit_epoch as the only
-    produce, one transaction per epoch with its marker record — with
-    SpoolTxnFactory as the broker stand-in landing commits in FileTopic
-    layout for the read side. Results must equal the in-process batch
-    golden exactly: the config-switch parity check the broker-gated test
-    can't run here."""
-    import shutil
-
+@pytest.fixture(scope="module")
+def kafka_topology_drive(spark, sf_dir, tmp_path_factory):
+    """The broker-less Kafka e2e, driven once for the tests below: the FULL
+    async topology (6 queries + 4 service simulators) runs with every epoch
+    publish going through the KafkaTopic commit path — staged epochs,
+    commit_epoch as the only produce, one transaction per epoch with its
+    marker record — with SpoolTxnFactory as the broker stand-in landing
+    commits in FileTopic layout for the read side."""
     from bigtwine_streamprocessor_spark.streaming import topology
 
+    tmp_path = tmp_path_factory.mktemp("kafka_topology")
     batch = parsed_batch(spark, sf_dir, 25)
     n = batch.count()
     stream = write_feed(spark, batch, tmp_path / "tweets_in")()
@@ -309,12 +306,30 @@ def test_full_topology_over_kafka_commits(spark, sf_dir, tmp_path):
         spark, root, stream, "a-kspool", timeout_ms=20_000, topics=topics
     ) as run:
         results = wait_results(run, n, 120)
+    return root, topics, results, batch
+
+
+@pytest.mark.slow
+def test_full_topology_over_kafka_producer_path(kafka_topology_drive):
+    """Results of the Kafka-committed topology equal the in-process batch
+    golden exactly: the config-switch parity check the broker-gated test
+    can't run here. Stage roots are bound under the topology root."""
+    root, topics, results, batch = kafka_topology_drive
     # stage roots were bound under the topology root (not /tmp ambient)
     assert topics["results"].stage_root == os.path.join(root, "_kafka_stage")
     assert_matches_batch(results, batch)
-    # every committed epoch also landed its marker RECORD atomically, and
-    # epoch_committed resolves from the marker stream even with the
-    # local cache wiped (the crash-before-cache-write recovery path)
+
+
+@pytest.mark.slow
+def test_full_topology_over_transactional_commits(kafka_topology_drive):
+    """Every committed epoch of the same drive also landed its marker RECORD
+    atomically, and epoch_committed resolves from the marker stream even
+    with the local cache wiped (the crash-before-cache-write recovery
+    path)."""
+    import shutil
+
+    _, topics, results, batch = kafka_topology_drive
+    assert_matches_batch(results, batch)
     markers = topics["results"]._txn_factory.committed_markers(
         topics["results"].bootstrap, topics["results"].marker_topic()
     )
