@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,6 +126,10 @@ class KafkaTopic:
         self._stage_topic: FileTopic | None = None  # see _stage()
         self._run: str | None = None  # see _run_id()
         self._txn_factory = transactional_factory
+        # epoch -> marker record of this run: the marker stream read once
+        # per topic life, plus this life's commits (see _stream_markers)
+        self._markers: dict[str, dict] | None = None
+        self._markers_lock = threading.Lock()
 
     # ---- staged-epoch layout ----------------------------------------------
 
@@ -159,7 +164,7 @@ class KafkaTopic:
             stage_root
         ):
             shutil.rmtree(self._topic_stage(), ignore_errors=True)
-            self._run = None
+            self._run = self._markers = None
             return
         stale = _visible_json_files(os.path.join(self._topic_stage(), "_committed"))
         if stale:
@@ -240,17 +245,36 @@ class KafkaTopic:
         # the marker file is only a CACHE — a crash after commit_transaction
         # but before the file landed must not re-produce, so consult the
         # read-committed marker stream when the factory provides one
-        reader = getattr(self._txn_factory, "committed_markers", None)
-        if callable(reader):
-            for raw in reader(self.bootstrap, self.marker_topic()):
-                try:
-                    rec = json.loads(raw)
-                except (TypeError, ValueError):
-                    continue
-                if rec.get("epoch") == prefix and rec.get("run") == self._run_id():
-                    self._cache_marker(prefix, rec)
-                    return True
-        return False
+        rec = self._stream_markers().get(prefix)
+        if rec is None:
+            return False
+        self._cache_marker(prefix, rec)
+        return True
+
+    def _stream_markers(self) -> dict[str, dict]:
+        """This run's marker records by epoch. The marker stream is read
+        once per topic life, on the first epoch asked about, and this
+        life's commits are added as they land: the only epoch committed
+        without its marker file is one whose transaction was in flight
+        when an earlier life died, and its record is in the stream before
+        this life's first read."""
+        with self._markers_lock:
+            if self._markers is None:
+                reader = getattr(self._txn_factory, "committed_markers", None)
+                raws = (
+                    reader(self.bootstrap, self.marker_topic())
+                    if callable(reader)
+                    else []
+                )
+                self._markers = {}
+                for raw in raws:
+                    try:
+                        rec = json.loads(raw)
+                    except (TypeError, ValueError):
+                        continue
+                    if rec.get("run") == self._run_id():
+                        self._markers[rec.get("epoch")] = rec
+            return self._markers
 
     def _cache_marker(self, prefix: str, payload: dict) -> None:
         marker = self._marker(prefix)
@@ -316,7 +340,11 @@ class KafkaTopic:
         except Exception as e:
             if _is_fenced(e):
                 # the newer instance commits (or aborts) this epoch;
-                # leave staging/markers for it — our attempt is void
+                # leave staging/markers for it — our attempt is void. Its
+                # record may land in the stream during this life, so the
+                # next check reads the stream again.
+                with self._markers_lock:
+                    self._markers = None
                 return
             try:
                 p.abort_transaction()
@@ -327,6 +355,9 @@ class KafkaTopic:
             close = getattr(p, "close", None)
             if callable(close):
                 close()
+        with self._markers_lock:
+            if self._markers is not None:  # else the next read finds it
+                self._markers[prefix] = payload
         self._cache_marker(prefix, payload)
         self._stage().begin_epoch(prefix)  # drop the drained staging
 

@@ -26,7 +26,11 @@ and Q6's result lines — is DataFrame expressions + ``to_json`` written from
 EXECUTORS via ``foreachPartition``. The driver never holds stream-
 proportional data: each response envelope's ``items`` array carries one entry
 per tweet in the micro-batch, so even "one line per batch" is row-
-proportional CONTENT and stays off the driver. Running over Kafka is a
+proportional CONTENT and stays off the driver. A batch that reads at most
+``spark.sql.files.openCostInBytes`` of files (one file-open's worth, 4 MB
+by default) is written from ONE executor task instead of one per file;
+larger batches keep the file source's partitioning (see
+``_one_task_if_small``). Running over Kafka is a
 config switch — pass ``kafka_transport.make_kafka_topics(...)`` as
 ``topics`` — not a rewrite.
 """
@@ -38,6 +42,7 @@ import time
 from datetime import datetime
 from typing import NamedTuple
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -199,6 +204,46 @@ def reset_publish_stats() -> dict:
     return snap
 
 
+def _one_task_if_small(df: DataFrame) -> RDD:
+    """``df``'s rows as an RDD, merged into ONE task when all it reads is
+    files whose bytes sum to at most ``spark.sql.files.openCostInBytes``
+    (Spark's own price of opening one file, 4 MB by default).
+
+    The file source splits a trigger into about min(files, cores)
+    partitions, so a trigger of a few one-line topic files would run one
+    Python task per file, for a handful of rows each. The batch's planned
+    lineage is walked through narrow dependencies only: a batch behind a
+    shuffle (Q6's stateful fan-in, whose partition count its checkpoint
+    fixes), one with any input that is not a file scan, and one larger
+    than the threshold all keep their partitioning. (``inputFiles()``
+    cannot tell: ``foreachBatch`` hands over a frame over an already
+    planned RDD, whose input files it does not list.)"""
+    rdd = df.rdd
+    jvm = rdd.ctx._jvm
+    narrow = jvm.java.lang.Class.forName("org.apache.spark.NarrowDependency")
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.filesOpenCostInBytes()
+    total, files, stack = 0, 0, [rdd._jrdd.rdd()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "FileScanRDD":
+            for part in node.partitions():
+                for f in part.files():
+                    total, files = total + f.length(), files + 1
+            if total > limit:
+                return rdd
+            continue
+        deps = node.dependencies()
+        if deps.isEmpty():
+            return rdd  # an input that is not a file scan
+        for i in range(deps.size()):
+            dep = deps.apply(i)
+            if not narrow.isInstance(dep):
+                return rdd
+            stack.append(dep.rdd())
+    return rdd.coalesce(1) if files else rdd
+
+
 def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
     """Exactly-once epoch publish of one batch to one or more topics, in
     ONE Spark action.
@@ -211,7 +256,11 @@ def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
     ONCE however many topics it feeds (guide §1.2/§2.6: per-micro-batch
     fixed cost was 3 jobs + a persist for Q1, now 1 job and no cache churn);
     each writer sees the same per-partition row order a separate action
-    would have.
+    would have. A batch that reads less than one file-open's worth of bytes
+    runs as ONE task (``_one_task_if_small``): on a light stream, Q1–Q5
+    would otherwise spread about four rows over four Python tasks per
+    trigger. Larger batches, and Q6's (behind the fan-in's shuffle), keep
+    their partitioning.
 
     Per-partition publish NAMES alone cannot survive a restart that
     repartitions the replayed batch (file-source packing depends on
@@ -269,7 +318,7 @@ def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
                 _accs[col].add(1)
             writer(iter(vals))
 
-    df.foreachPartition(write_all)
+    _one_task_if_small(df).foreachPartition(write_all)
     for topic, prefix, col, _key, _writer in live:
         visible = topic.staged_partition_count(prefix)
         if visible != accs[col].value:

@@ -17,9 +17,14 @@ topology's topics; every transform in between is unchanged.
 Scale note: everything row-proportional (fragment lines, request items,
 response-envelope parsing, result lines) is built with DataFrame expressions
 and written from EXECUTORS via ``foreachPartition`` — the topology holds no
-driver-side collect of stream-proportional data at all. Request envelopes
+driver-side collect of stream-proportional data at all. A batch that reads
+at most ``spark.sql.files.openCostInBytes`` of files is written from one
+task; larger ones keep the file source's partitioning. Request envelopes
 are emitted one-per-partition (15-item chunks for geo), which the
-reply-topic consumers are agnostic to.
+reply-topic consumers are agnostic to. Pollers (service simulators, result
+counters) list only the top-level topic entries they have not walked
+before (``NewTopicFiles``), so a poll costs the same at epoch 10 and at
+epoch 10,000.
 """
 
 from __future__ import annotations
@@ -148,6 +153,38 @@ def _visible_json_files(topic_dir: str) -> list[str]:
             if fn.endswith(".json") and not fn.startswith((".", "_")):
                 out.append(fn if rel == "." else f"{rel}/{fn}")
     return sorted(out)
+
+
+class NewTopicFiles:
+    """The visible files of a topic dir that are new since the last call.
+
+    A top-level entry only ever arrives whole: a committed epoch dir by one
+    rename of its staged dir (it never changes after), a file by
+    ``os.replace``. So each call lists the top level once and walks only
+    the entries it has not walked before: a poll of a topic holding N
+    committed epochs opens none of them. Not thread-safe; one per poller.
+    """
+
+    def __init__(self, topic_dir: str):
+        self._dir = topic_dir
+        self._walked: set[str] = set()
+
+    def __call__(self) -> list[str]:
+        try:
+            names = os.listdir(self._dir)
+        except FileNotFoundError:
+            return []
+        out: list[str] = []
+        for name in set(names) - self._walked:
+            if name.startswith((".", "_")):
+                continue  # staging and tmp dirs change; readers never see them
+            path = os.path.join(self._dir, name)
+            if os.path.isdir(path):
+                out += [f"{name}/{rel}" for rel in _visible_json_files(path)]
+            elif name.endswith(".json"):
+                out.append(name)
+            self._walked.add(name)
+        return sorted(out)
 
 
 def read_lines(topic_dir: str) -> list[str]:
@@ -349,6 +386,7 @@ class ServiceSimulator(threading.Thread):
                 self._seen = {ln.strip() for ln in f if ln.strip()}
         # NOT named _stop: Thread.join() calls an internal self._stop()
         self._halt = threading.Event()
+        self._new_requests = NewTopicFiles(req.dir)
         self.error: str | None = None  # set when run() dies on a request file
 
     @property
@@ -361,23 +399,28 @@ class ServiceSimulator(threading.Thread):
 
     def run(self):
         while not self._halt.is_set():
-            for fn_ in _visible_json_files(self.req.dir):
-                if fn_ in self._seen:
-                    continue
-                try:
-                    self._answer(fn_)
-                except Exception as exc:
-                    # the thread still dies (its offset stays uncommitted,
-                    # so a restart retries the file); the error names the
-                    # request file for TopologyRun.check()
-                    self.error = f"request file {fn_}: {type(exc).__name__}: {exc}"
-                    raise
-                self._seen.add(fn_)
-                if self._offsets_path:
-                    with open(self._offsets_path, "a") as f:
-                        f.write(fn_ + "\n")
-                        f.flush()
+            self.poll()
             time.sleep(self.poll_s)
+
+    def poll(self) -> None:
+        """Answer the request files that are new since the last poll and
+        not answered in an earlier life."""
+        for fn_ in self._new_requests():
+            if fn_ in self._seen:
+                continue
+            try:
+                self._answer(fn_)
+            except Exception as exc:
+                # the thread still dies (its offset stays uncommitted,
+                # so a restart retries the file); the error names the
+                # request file for TopologyRun.check()
+                self.error = f"request file {fn_}: {type(exc).__name__}: {exc}"
+                raise
+            self._seen.add(fn_)
+            if self._offsets_path:
+                with open(self._offsets_path, "a") as f:
+                    f.write(fn_ + "\n")
+                    f.flush()
 
     def _answer(self, fn_: str) -> None:
         # ONE response file per request FILE (r15; was one per request
@@ -434,21 +477,18 @@ class TopicCounter:
     ``read_all()`` in a sampling loop re-reads every file on every poll —
     O(files^2) I/O across a run, enough to perturb the throughput being
     measured once a topic holds ~1000 files. Topic files are immutable once
-    atomically renamed in, so counting only files not seen on a previous
-    poll is exact. Not thread-safe; one counter per polling loop.
+    atomically renamed in, so counting only the files new since the last
+    poll (``NewTopicFiles``) is exact. Not thread-safe; one counter per
+    polling loop.
     """
 
     def __init__(self, topic: FileTopic):
         self._dir = topic.dir
-        self._seen: dict[str, int] = {}
+        self._new = NewTopicFiles(topic.dir)
         self._total = 0
 
     def count(self) -> int:
-        for fn in _visible_json_files(self._dir):
-            if fn in self._seen:
-                continue
+        for fn in self._new():
             with open(os.path.join(self._dir, fn)) as f:
-                n = sum(1 for ln in f if ln.strip())
-            self._seen[fn] = n
-            self._total += n
+                self._total += sum(1 for ln in f if ln.strip())
         return self._total

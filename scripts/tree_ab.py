@@ -17,6 +17,18 @@ Usage:
 
 The worker mode (--worker --root DIR) is internal: it imports DIR's
 registry, times the queries once, and prints one JSON line.
+
+Benchmark pair mode:
+  python scripts/tree_ab.py --tree-a PARENT --tree-b CHANGE \
+      --perfbench stream_light --pairs 10 --seed0 2201 --out AB.json
+
+runs ``python3 perfbench/run.py --workload <w> --seed <s> --seconds 10
+--trace 0`` from each tree, pair k with seed ``seed0 + k``, the side that
+runs first alternating per pair. ``--out`` gets the per-run records under
+the workload's name and, per end-to-end metric of BENCHMARK.json, each
+side's median and quartiles, b's wins and whether a's spread is inside the
+metric's bound (``summarize``). Records of other workloads already in
+``--out`` are kept, so one file can hold both workloads.
 """
 
 from __future__ import annotations
@@ -24,6 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -145,7 +158,14 @@ def _worker(root: str, queries: list[str], sf_dir: str,
         )
         topo = {
             k: topo.get(k)
-            for k in ("tweets", "completed", "elapsed_s", "tweets_per_s")
+            for k in (
+                "tweets",
+                "completed",
+                "elapsed_s",
+                "tweets_per_s",
+                "steady_tweets_per_s",
+                "rows_per_trigger",
+            )
         }
 
     spark.stop()
@@ -164,6 +184,124 @@ def _worker(root: str, queries: list[str], sf_dir: str,
     )
 
 
+PERFBENCH_SECONDS = 10
+
+
+def _perfbench_run(tree: str, workload: str, seed: int) -> dict:
+    """One ``perfbench/run.py`` run from ``tree``: its exit code, wall
+    time and last stdout line (``correct``, ``attempted``, ``failed``,
+    ``metrics``); a run that printed no result keeps its stderr tail."""
+    cmd = [
+        sys.executable, "perfbench/run.py", "--workload", workload,
+        "--seed", str(seed), "--seconds", str(PERFBENCH_SECONDS), "--trace", "0",
+    ]
+    t0 = time.time()
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tree)
+    rec = {"rc": proc.returncode, "wall_s": round(time.time() - t0, 1)}
+    lines = proc.stdout.strip().splitlines()
+    try:
+        res = json.loads(lines[-1])
+        rec.update({k: res[k] for k in ("correct", "attempted", "failed", "metrics")})
+    except (IndexError, KeyError, ValueError):
+        rec["error"] = proc.stderr[-1000:]
+    return rec
+
+
+def _quartiles(xs: list[float]) -> list[float]:
+    if len(xs) == 1:
+        return [xs[0]] * 3
+    return statistics.quantiles(xs, n=4, method="inclusive")
+
+
+def summarize(records: list[dict], end_to_end: list[dict]) -> dict:
+    """Per end-to-end metric (BENCHMARK.json's ``end_to_end`` entries),
+    over the pairs where both sides report it: each side's median and
+    quartiles, ``b_over_a`` of the medians, ``b_wins`` (pairs in which b
+    is better in the metric's direction), and ``a_spread`` (a's IQR over
+    its median) with ``resolved`` false when that spread exceeds the
+    metric's bound, since a difference inside the parent's own spread
+    cannot be told from noise. ``runs`` counts each side's runs, failed
+    operations and runs without a result."""
+    pairs: dict[int, dict[str, dict]] = {}
+    for r in records:
+        pairs.setdefault(r["pair"], {})[r["side"]] = r
+    out: dict[str, dict] = {
+        "runs": {
+            side: {
+                "runs": sum(r["side"] == side for r in records),
+                "failed": sum(r.get("failed", 0) for r in records if r["side"] == side),
+                "no_result": sum(
+                    "metrics" not in r or r["rc"] != 0
+                    for r in records
+                    if r["side"] == side
+                ),
+            }
+            for side in ("a", "b")
+        }
+    }
+    for m in end_to_end:
+        name, lower = m["name"], m["better"] == "lower"
+        a, b = [], []
+        for sides in pairs.values():
+            va, vb = (
+                sides.get(s, {}).get("metrics", {}).get(name, {}).get("value")
+                for s in ("a", "b")
+            )
+            if va is not None and vb is not None:
+                a.append(va)
+                b.append(vb)
+        if not a:
+            continue
+        qa, qb = _quartiles(a), _quartiles(b)
+        spread = (qa[2] - qa[0]) / qa[1] if qa[1] else float("inf")
+        out[name] = {
+            "pairs": len(a),
+            "a_median": round(qa[1], 4),
+            "a_iqr": [round(qa[0], 4), round(qa[2], 4)],
+            "b_median": round(qb[1], 4),
+            "b_iqr": [round(qb[0], 4), round(qb[2], 4)],
+            "b_over_a": round(qb[1] / qa[1], 3) if qa[1] else None,
+            "b_wins": sum((y < x) if lower else (y > x) for x, y in zip(a, b)),
+            "a_spread": round(spread, 3),
+            "bound": m["bound"],
+            "resolved": spread <= m["bound"],
+        }
+    return out
+
+
+def _perfbench_pairs(args) -> None:
+    trees = {"a": args.tree_a, "b": args.tree_b}
+    records = []
+    for pair in range(args.pairs):
+        seed = args.seed0 + pair
+        for side in ("a", "b") if pair % 2 == 0 else ("b", "a"):
+            rec = {"pair": pair, "seed": seed, "side": side}
+            rec.update(_perfbench_run(trees[side], args.perfbench, seed))
+            records.append(rec)
+            vals = {k: round(v["value"], 3) for k, v in rec.get("metrics", {}).items()}
+            print(f"pair {pair} seed {seed} {side}: rc {rec['rc']} {vals}", flush=True)
+    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
+        end_to_end = json.load(fh)["end_to_end"]
+    out = {}
+    if os.path.exists(args.out):
+        with open(args.out) as fh:
+            out = json.load(fh)
+    out.update(
+        {
+            "what": "alternating a/b pairs of `python3 perfbench/run.py --workload "
+            f"<w> --seed <s> --seconds {PERFBENCH_SECONDS} --trace 0`, the side "
+            "that runs first alternating per pair",
+            "tree_a": trees["a"],
+            "tree_b": trees["b"],
+            args.perfbench: records,
+        }
+    )
+    out.setdefault("summary", {})[args.perfbench] = summarize(records, end_to_end)
+    with open(args.out, "w") as fh:
+        json.dump(out, fh, indent=2, sort_keys=True)
+    print(json.dumps(out["summary"][args.perfbench], indent=2))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--worker", action="store_true")
@@ -176,6 +314,9 @@ def main() -> None:
     ap.add_argument("--topo-amplify", type=int, default=20)
     ap.add_argument("--topo-files", type=int, default=64)
     ap.add_argument("--topology-all-reps", action="store_true")
+    ap.add_argument("--perfbench", help="benchmark workload: run pair mode")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--out", default=os.path.join(HERE, "..", "AB_r14.json"))
     ap.add_argument(
         "--sf-dir",
@@ -187,6 +328,9 @@ def main() -> None:
     if args.worker:
         _worker(args.root, queries, args.sf_dir, args.topology,
                 args.topo_amplify, args.topo_files)
+        return
+    if args.perfbench:
+        _perfbench_pairs(args)
         return
 
     trees = {"a": args.tree_a, "b": args.tree_b}

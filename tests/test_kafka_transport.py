@@ -12,7 +12,9 @@ from bigtwine_streamprocessor_spark.streaming import kafka_transport as kt
 from bigtwine_streamprocessor_spark.streaming.transport import read_lines
 from tests.topology_drive import (
     assert_matches_batch,
+    nel_held,
     parsed_batch,
+    wait_held,
     wait_results,
     write_feed,
 )
@@ -234,6 +236,8 @@ def test_epoch_publish_cross_checks_driver_visibility(spark, tmp_path):
 
     topic = _topic(tmp_path, name="results")
     df = spark.range(20).repartition(4).selectExpr("concat('v-', id) AS value")
+    # not a file scan: the publish keeps four partitions to count
+    assert topology._one_task_if_small(df).getNumPartitions() == 4
     # healthy path: counts agree, epoch commits, lines produced once
     topology._epoch_publish(
         df, [(topic, "q9-e0", "value", "value", topic.line_writer("q9-e0"))]
@@ -373,17 +377,16 @@ def test_topology_restart_over_kafka_path_is_exactly_once(
             for name in topology.TOPIC_NAMES
         }
 
-    # ---- first life: run until SOME results exist, then hard-stop --------
-    # generous deadlines: passing runs break out as soon as results land;
-    # the budget only matters when the host is contended (the two r12
-    # in-suite flakes both coincided with a concurrent 15 GB replica
-    # build), and a load-induced timeout must not read as an exactly-once
-    # failure
-    with topology.start_topology(
+    # ---- first life: NEL held, so no tweet can complete; hard-stop once
+    # work reaches it. Generous deadlines: passing runs break out as soon
+    # as the condition holds; the budget only matters when the host is
+    # contended, and a load-induced timeout must not read as an
+    # exactly-once failure
+    with nel_held() as asked, topology.start_topology(
         spark, root, make_stream(), "a-krs", timeout_ms=60_000,
         topics=make_topics(),
     ) as run:
-        wait_results(run, 1, 180)
+        wait_held(run, asked, 180)
     mid = len(run.topics["results"].read_all())
     assert mid < n, "stop landed after completion; nothing left to recover"
 
@@ -493,6 +496,60 @@ class _FakeTxnFactory:
 
     def committed_markers(self, bootstrap, marker_topic):
         return [v.decode() for v in self.broker.committed.get(marker_topic, [])]
+
+
+def test_marker_stream_read_once_per_topic_life(tmp_path):
+    """Every fresh epoch misses its marker file, and ``_epoch_publish`` and
+    ``commit_epoch`` each ask about it; 1,000 empty epochs, committed from
+    8 threads as the topology's queries share a topic, still read the
+    marker stream once. A new life with the marker cache wiped reads it
+    once more and finds every commit of its run."""
+    import shutil
+    import sys
+    import threading
+
+    class CountingFactory(kt.SpoolTxnFactory):
+        reads = 0
+
+        def committed_markers(self, bootstrap, marker_topic):
+            self.reads += 1
+            return super().committed_markers(bootstrap, marker_topic)
+
+    factory = CountingFactory(str(tmp_path / "spool"))
+    topic = _topic(tmp_path, "results", factory)
+    errors = []
+
+    def commit_every_8th(first):
+        try:
+            for e in range(first, 1000, 8):
+                assert topic.epoch_committed(f"q1-e{e}") is False
+                topic.begin_epoch(f"q1-e{e}")
+                topic.commit_epoch(f"q1-e{e}")
+        except Exception as exc:  # reported by the main thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=commit_every_8th, args=(w,)) for w in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert factory.reads == 1
+    assert len(factory.committed_markers(topic.bootstrap, topic.marker_topic())) == 1000
+
+    shutil.rmtree(os.path.dirname(topic._marker("q1-e0")))
+    factory.reads = 0
+    again = _topic(tmp_path, "results", factory)
+    assert all(again.epoch_committed(f"q1-e{e}") for e in range(1000))
+    assert again.epoch_committed("q1-e1000") is False
+    assert factory.reads == 1
 
 
 def test_txn_commit_lands_records_and_marker_atomically(tmp_path):

@@ -6,7 +6,9 @@ import pytest
 from bigtwine_streamprocessor_spark.streaming import topology
 from tests.topology_drive import (
     assert_matches_batch,
+    nel_held,
     parsed_batch,
+    wait_held,
     wait_results,
     write_feed,
 )
@@ -153,6 +155,83 @@ def test_envelope_writer_replay_single_shot(tmp_path):
     assert env["outputTopic"] == "reply.topic"
 
 
+def _publish_stream(spark, tmp_path, lines_per_file, files=4):
+    """Stream ``files`` text files through ``_epoch_publish`` into a
+    FileTopic, as the topology's hops do; returns the committed epoch dirs
+    that hold data, each with its partition files, and the lines."""
+    import os
+
+    from bigtwine_streamprocessor_spark.streaming import transport
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for i in range(files):
+        (indir / f"f{i}.txt").write_text(
+            "".join(f"{i}-{k}\n" for k in range(lines_per_file))
+        )
+    topic = transport.FileTopic(str(tmp_path), "out")
+
+    def publish(batch_df, epoch_id):
+        pfx = f"q9-e{epoch_id}"
+        topology._epoch_publish(
+            batch_df.selectExpr("concat('v-', value) AS value"),
+            [(topic, pfx, "value", "value", topic.line_writer(pfx))],
+        )
+
+    q = (
+        spark.readStream.schema("value STRING").text(str(indir))
+        .writeStream.foreachBatch(publish)
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    epochs = {
+        d: sorted(os.listdir(os.path.join(topic.dir, d)))
+        for d in sorted(os.listdir(topic.dir))
+        if not d.startswith(".") and os.listdir(os.path.join(topic.dir, d))
+    }
+    return epochs, topic.read_all()
+
+
+def test_small_file_batch_publishes_from_one_task(spark, tmp_path):
+    """A trigger of a few one-line files (about four Python tasks from the
+    file source) reads far less than one file-open's worth of bytes, so
+    ``_epoch_publish`` runs it as one task: one staged partition file,
+    every row, and the staged-count cross-check passes."""
+    epochs, lines = _publish_stream(spark, tmp_path, lines_per_file=1)
+    assert epochs == {"q9-e0": ["p0.json"]}
+    assert sorted(lines) == [f"v-{i}-0" for i in range(4)]
+
+
+def test_file_batch_above_open_cost_keeps_its_partitions(spark, tmp_path):
+    """Above ``spark.sql.files.openCostInBytes`` the batch keeps the file
+    source's partitioning (lowered here so four small files exceed it)."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        epochs, lines = _publish_stream(spark, tmp_path, lines_per_file=20)
+    finally:
+        spark.conf.set(key, old)
+    assert list(epochs) == ["q9-e0"] and len(epochs["q9-e0"]) > 1
+    assert len(lines) == 80 and len(set(lines)) == 80
+
+
+def test_one_task_rule_leaves_shuffled_batches(spark, tmp_path):
+    """Only a batch whose every input is a file scan, reached without a
+    shuffle, can become one task: a batch behind an exchange (Q6's
+    stateful fan-in is one) keeps its partitioning. (A non-file input:
+    ``test_epoch_publish_cross_checks_driver_visibility``.)"""
+    (tmp_path / "a.txt").write_text("x\ny\n")
+    grouped = spark.read.text(str(tmp_path / "a.txt")).groupBy("value").count()
+    assert topology._one_task_if_small(grouped) is grouped.rdd
+    small = spark.read.text(str(tmp_path / "a.txt"))
+    assert topology._one_task_if_small(small).getNumPartitions() == 1
+
+
 @pytest.mark.slow
 def test_topology_restart_is_exactly_once(spark, sf_dir, tmp_path):
     """Hard-stop the live topology mid-stream, restart it from the same
@@ -171,11 +250,12 @@ def test_topology_restart_is_exactly_once(spark, sf_dir, tmp_path):
     make_stream = write_feed(spark, batch, tmp_path / "tweets_in", files=6)
     root = str(tmp_path / "topics")
 
-    # ---- first life: run until SOME results exist, then hard-stop --------
-    with topology.start_topology(
+    # ---- first life: NEL held, so no tweet can complete; hard-stop once
+    # work reaches it ------------------------------------------------------
+    with nel_held() as asked, topology.start_topology(
         spark, root, make_stream(), "a-topo", timeout_ms=60_000
     ) as run:
-        wait_results(run, 1, 90)
+        wait_held(run, asked, 90)
     mid = len(run.topics["results"].read_all())
     assert mid < n, "stop landed after completion; nothing left to recover"
 
@@ -211,6 +291,44 @@ def test_topic_counter_matches_read_all(tmp_path):
     transport.append_lines_to_dir(topic.dir, ["d", "e", "f"])
     assert counter.count() == len(topic.read_all()) == 6
     assert counter.count() == 6  # idempotent poll
+
+
+def test_simulator_poll_opens_no_answered_epoch_dir(tmp_path, monkeypatch):
+    """A committed epoch dir never changes after its rename, so once 1,000
+    of them are answered a poll lists the topic's top level and opens none
+    of them; a newly committed epoch is still found."""
+    import os
+
+    from bigtwine_streamprocessor_spark.streaming import transport
+
+    req = transport.FileTopic(str(tmp_path), "ner-requests")
+    resp = transport.FileTopic(str(tmp_path), "ner-responses")
+
+    def commit_request(e):
+        env = transport.make_envelope([{"tag": str(e), "text": "spark"}], "r.a")
+        staged = f"{transport.STAGING}/q1-e{e}/p0"
+        transport.append_lines_to_dir(req.dir, [env], fname=staged)
+        req.commit_epoch(f"q1-e{e}")
+
+    for e in range(1000):
+        commit_request(e)
+    sim = transport.ServiceSimulator(req, resp, transport.ner_service)
+    sim.poll()
+    assert sim.answered == 1000
+
+    listed = []
+    for name in ("listdir", "scandir"):
+        real = getattr(os, name)
+        monkeypatch.setattr(
+            os, name, lambda p=".", _real=real: listed.append(str(p)) or _real(p)
+        )
+    sim.poll()
+    assert listed == [req.dir]
+    commit_request(1000)
+    listed.clear()
+    sim.poll()
+    assert listed == [req.dir, os.path.join(req.dir, "q1-e1000")]
+    assert sim.answered == 1001 and len(resp.read_all()) == 1001
 
 
 @pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
