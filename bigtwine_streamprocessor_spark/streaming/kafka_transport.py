@@ -257,7 +257,16 @@ class KafkaTopic:
         life's commits are added as they land: the only epoch committed
         without its marker file is one whose transaction was in flight
         when an earlier life died, and its record is in the stream before
-        this life's first read."""
+        this life's first read.
+
+        This relies on ONE live instance per stage root. An older instance
+        that is still alive and commits epoch e after that read, before its
+        marker file lands, is not seen: ``epoch_committed(e)`` stays False
+        for this life, which then produces e again. (Reading the stream on
+        every check only narrowed that window; fencing voids the older
+        instance's commit only once this life's producer for e has called
+        ``init_transactions``.) A fenced commit of this life drops the
+        memory, so its next check reads the stream again."""
         with self._markers_lock:
             if self._markers is None:
                 reader = getattr(self._txn_factory, "committed_markers", None)

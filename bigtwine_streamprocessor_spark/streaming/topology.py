@@ -26,12 +26,11 @@ and Q6's result lines — is DataFrame expressions + ``to_json`` written from
 EXECUTORS via ``foreachPartition``. The driver never holds stream-
 proportional data: each response envelope's ``items`` array carries one entry
 per tweet in the micro-batch, so even "one line per batch" is row-
-proportional CONTENT and stays off the driver. A batch that reads at most
-``spark.sql.files.openCostInBytes`` of files (one file-open's worth, 4 MB
-by default) is written from ONE executor task instead of one per file;
-larger batches keep the file source's partitioning (see
-``_one_task_if_small``). Running over Kafka is a
-config switch — pass ``kafka_transport.make_kafka_topics(...)`` as
+proportional CONTENT and stays off the driver. A batch read from topic
+files alone is written from ONE executor task instead of one per file
+(``_one_task_if_file_scan``); a batch from a Kafka source, and Q6's
+behind the fan-in's shuffle, keep their partitioning. Running over Kafka
+is a config switch — pass ``kafka_transport.make_kafka_topics(...)`` as
 ``topics`` — not a rewrite.
 """
 
@@ -204,34 +203,26 @@ def reset_publish_stats() -> dict:
     return snap
 
 
-def _one_task_if_small(df: DataFrame) -> RDD:
-    """``df``'s rows as an RDD, merged into ONE task when all it reads is
-    files whose bytes sum to at most ``spark.sql.files.openCostInBytes``
-    (Spark's own price of opening one file, 4 MB by default).
+def _one_task_if_file_scan(df: DataFrame) -> RDD:
+    """``df``'s rows as an RDD, merged into ONE task when its planned
+    lineage reaches only file scans through narrow dependencies.
 
     The file source splits a trigger into about min(files, cores)
     partitions, so a trigger of a few one-line topic files would run one
-    Python task per file, for a handful of rows each. The batch's planned
-    lineage is walked through narrow dependencies only: a batch behind a
+    Python task per file, for a handful of rows each. A batch behind a
     shuffle (Q6's stateful fan-in, whose partition count its checkpoint
-    fixes), one with any input that is not a file scan, and one larger
-    than the threshold all keep their partitioning. (``inputFiles()``
-    cannot tell: ``foreachBatch`` hands over a frame over an already
-    planned RDD, whose input files it does not list.)"""
+    fixes) and one with any input that is not a file scan (a Kafka
+    source's batch, ``spark.range``) keep their partitioning.
+    (``inputFiles()`` cannot tell: ``foreachBatch`` hands over a frame
+    over an already planned RDD, whose input files it does not list.)"""
     rdd = df.rdd
-    jvm = rdd.ctx._jvm
-    narrow = jvm.java.lang.Class.forName("org.apache.spark.NarrowDependency")
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    limit = conf.filesOpenCostInBytes()
-    total, files, stack = 0, 0, [rdd._jrdd.rdd()]
+    cls = rdd.ctx._jvm.java.lang.Class.forName
+    narrow = cls("org.apache.spark.NarrowDependency")
+    scan = cls("org.apache.spark.sql.execution.datasources.FileScanRDD")
+    stack = [rdd._jrdd.rdd()]
     while stack:
         node = stack.pop()
-        if node.getClass().getSimpleName() == "FileScanRDD":
-            for part in node.partitions():
-                for f in part.files():
-                    total, files = total + f.length(), files + 1
-            if total > limit:
-                return rdd
+        if scan.isInstance(node):
             continue
         deps = node.dependencies()
         if deps.isEmpty():
@@ -241,7 +232,7 @@ def _one_task_if_small(df: DataFrame) -> RDD:
             if not narrow.isInstance(dep):
                 return rdd
             stack.append(dep.rdd())
-    return rdd.coalesce(1) if files else rdd
+    return rdd.coalesce(1)
 
 
 def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
@@ -256,11 +247,11 @@ def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
     ONCE however many topics it feeds (guide §1.2/§2.6: per-micro-batch
     fixed cost was 3 jobs + a persist for Q1, now 1 job and no cache churn);
     each writer sees the same per-partition row order a separate action
-    would have. A batch that reads less than one file-open's worth of bytes
-    runs as ONE task (``_one_task_if_small``): on a light stream, Q1–Q5
-    would otherwise spread about four rows over four Python tasks per
-    trigger. Larger batches, and Q6's (behind the fan-in's shuffle), keep
-    their partitioning.
+    would have. A batch read from files alone runs as ONE task
+    (``_one_task_if_file_scan``): on a light stream, Q1–Q5 would otherwise
+    spread about four rows over four Python tasks per trigger. Q6's batch
+    (behind the fan-in's shuffle) and a Kafka source's keep their
+    partitioning.
 
     Per-partition publish NAMES alone cannot survive a restart that
     repartitions the replayed batch (file-source packing depends on
@@ -318,7 +309,7 @@ def _epoch_publish(df: DataFrame, specs: list[tuple]) -> None:
                 _accs[col].add(1)
             writer(iter(vals))
 
-    _one_task_if_small(df).foreachPartition(write_all)
+    _one_task_if_file_scan(df).foreachPartition(write_all)
     for topic, prefix, col, _key, _writer in live:
         visible = topic.staged_partition_count(prefix)
         if visible != accs[col].value:

@@ -17,14 +17,13 @@ topology's topics; every transform in between is unchanged.
 Scale note: everything row-proportional (fragment lines, request items,
 response-envelope parsing, result lines) is built with DataFrame expressions
 and written from EXECUTORS via ``foreachPartition`` — the topology holds no
-driver-side collect of stream-proportional data at all. A batch that reads
-at most ``spark.sql.files.openCostInBytes`` of files is written from one
-task; larger ones keep the file source's partitioning. Request envelopes
-are emitted one-per-partition (15-item chunks for geo), which the
-reply-topic consumers are agnostic to. Pollers (service simulators, result
-counters) list only the top-level topic entries they have not walked
-before (``NewTopicFiles``), so a poll costs the same at epoch 10 and at
-epoch 10,000.
+driver-side collect of stream-proportional data at all. A batch read from
+topic files alone is written from one task (a Kafka source's batch keeps
+its partitioning). Request envelopes are emitted one-per-partition
+(15-item chunks for geo), which the reply-topic consumers are agnostic to.
+Pollers (service simulators, result counters) list only the top-level topic
+entries they have not walked before (``NewTopicFiles``), so a poll costs the
+same at epoch 10 and at epoch 10,000.
 """
 
 from __future__ import annotations

@@ -66,7 +66,8 @@ MIN2_THRESHOLD_S = 8.0
 
 
 def _worker(root: str, queries: list[str], sf_dir: str,
-            topology: bool, amplify: int = 20, n_files: int = 64) -> None:
+            topology: bool, amplify: int = 20, n_files: int = 64,
+            per_trigger: int = 8) -> None:
     sys.path.insert(0, root)
     from bigtwine_streamprocessor_spark import registry
     from bigtwine_streamprocessor_spark.session import get_spark
@@ -154,7 +155,8 @@ def _worker(root: str, queries: list[str], sf_dir: str,
             "SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01"
         )
         topo = bench_tree.bench_topology(
-            spark, stream_sf, timeout_s=420, amplify=amplify, n_files=n_files
+            spark, stream_sf, timeout_s=420, amplify=amplify, n_files=n_files,
+            max_files_per_trigger=per_trigger,
         )
         topo = {
             k: topo.get(k)
@@ -313,6 +315,9 @@ def main() -> None:
     ap.add_argument("--topology", action="store_true")
     ap.add_argument("--topo-amplify", type=int, default=20)
     ap.add_argument("--topo-files", type=int, default=64)
+    # bench.py's knee drive: --topo-amplify 240 --topo-files 768
+    # --topo-per-trigger 64 (about 9,400 rows a trigger)
+    ap.add_argument("--topo-per-trigger", type=int, default=8)
     ap.add_argument("--topology-all-reps", action="store_true")
     ap.add_argument("--perfbench", help="benchmark workload: run pair mode")
     ap.add_argument("--pairs", type=int, default=10)
@@ -327,7 +332,7 @@ def main() -> None:
 
     if args.worker:
         _worker(args.root, queries, args.sf_dir, args.topology,
-                args.topo_amplify, args.topo_files)
+                args.topo_amplify, args.topo_files, args.topo_per_trigger)
         return
     if args.perfbench:
         _perfbench_pairs(args)
@@ -356,7 +361,8 @@ def main() -> None:
             if args.topology and (rep == 0 or args.topology_all_reps):
                 cmd += ["--topology", "--topo-amplify",
                         str(args.topo_amplify), "--topo-files",
-                        str(args.topo_files)]
+                        str(args.topo_files), "--topo-per-trigger",
+                        str(args.topo_per_trigger)]
             t0 = time.time()
             proc = subprocess.run(
                 cmd, capture_output=True, text=True, cwd=trees[side]

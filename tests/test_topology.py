@@ -6,9 +6,8 @@ import pytest
 from bigtwine_streamprocessor_spark.streaming import topology
 from tests.topology_drive import (
     assert_matches_batch,
-    nel_held,
+    ner_held_after_first,
     parsed_batch,
-    wait_held,
     wait_results,
     write_feed,
 )
@@ -155,20 +154,19 @@ def test_envelope_writer_replay_single_shot(tmp_path):
     assert env["outputTopic"] == "reply.topic"
 
 
-def _publish_stream(spark, tmp_path, lines_per_file, files=4):
-    """Stream ``files`` text files through ``_epoch_publish`` into a
-    FileTopic, as the topology's hops do; returns the committed epoch dirs
-    that hold data, each with its partition files, and the lines."""
+def test_file_batch_publishes_from_one_task(spark, tmp_path):
+    """A trigger of four one-line files (about four Python tasks from the
+    file source) reaches only file scans, so ``_epoch_publish`` runs it as
+    one task: one staged partition file, every row, and the staged-count
+    cross-check passes."""
     import os
 
     from bigtwine_streamprocessor_spark.streaming import transport
 
     indir = tmp_path / "in"
     indir.mkdir()
-    for i in range(files):
-        (indir / f"f{i}.txt").write_text(
-            "".join(f"{i}-{k}\n" for k in range(lines_per_file))
-        )
+    for i in range(4):
+        (indir / f"f{i}.txt").write_text(f"{i}-0\n")
     topic = transport.FileTopic(str(tmp_path), "out")
 
     def publish(batch_df, epoch_id):
@@ -193,31 +191,8 @@ def _publish_stream(spark, tmp_path, lines_per_file, files=4):
         for d in sorted(os.listdir(topic.dir))
         if not d.startswith(".") and os.listdir(os.path.join(topic.dir, d))
     }
-    return epochs, topic.read_all()
-
-
-def test_small_file_batch_publishes_from_one_task(spark, tmp_path):
-    """A trigger of a few one-line files (about four Python tasks from the
-    file source) reads far less than one file-open's worth of bytes, so
-    ``_epoch_publish`` runs it as one task: one staged partition file,
-    every row, and the staged-count cross-check passes."""
-    epochs, lines = _publish_stream(spark, tmp_path, lines_per_file=1)
     assert epochs == {"q9-e0": ["p0.json"]}
-    assert sorted(lines) == [f"v-{i}-0" for i in range(4)]
-
-
-def test_file_batch_above_open_cost_keeps_its_partitions(spark, tmp_path):
-    """Above ``spark.sql.files.openCostInBytes`` the batch keeps the file
-    source's partitioning (lowered here so four small files exceed it)."""
-    key = "spark.sql.files.openCostInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "64")
-    try:
-        epochs, lines = _publish_stream(spark, tmp_path, lines_per_file=20)
-    finally:
-        spark.conf.set(key, old)
-    assert list(epochs) == ["q9-e0"] and len(epochs["q9-e0"]) > 1
-    assert len(lines) == 80 and len(set(lines)) == 80
+    assert sorted(topic.read_all()) == [f"v-{i}-0" for i in range(4)]
 
 
 def test_one_task_rule_leaves_shuffled_batches(spark, tmp_path):
@@ -227,9 +202,9 @@ def test_one_task_rule_leaves_shuffled_batches(spark, tmp_path):
     ``test_epoch_publish_cross_checks_driver_visibility``.)"""
     (tmp_path / "a.txt").write_text("x\ny\n")
     grouped = spark.read.text(str(tmp_path / "a.txt")).groupBy("value").count()
-    assert topology._one_task_if_small(grouped) is grouped.rdd
+    assert topology._one_task_if_file_scan(grouped) is grouped.rdd
     small = spark.read.text(str(tmp_path / "a.txt"))
-    assert topology._one_task_if_small(small).getNumPartitions() == 1
+    assert topology._one_task_if_file_scan(small).getNumPartitions() == 1
 
 
 @pytest.mark.slow
@@ -250,14 +225,14 @@ def test_topology_restart_is_exactly_once(spark, sf_dir, tmp_path):
     make_stream = write_feed(spark, batch, tmp_path / "tweets_in", files=6)
     root = str(tmp_path / "topics")
 
-    # ---- first life: NEL held, so no tweet can complete; hard-stop once
-    # work reaches it ------------------------------------------------------
-    with nel_held() as asked, topology.start_topology(
+    # ---- first life: only Q1's first epoch gets NER answers; hard-stop
+    # once some of its results landed -------------------------------------
+    with ner_held_after_first(), topology.start_topology(
         spark, root, make_stream(), "a-topo", timeout_ms=60_000
     ) as run:
-        wait_held(run, asked, 90)
+        wait_results(run, 1, 90)
     mid = len(run.topics["results"].read_all())
-    assert mid < n, "stop landed after completion; nothing left to recover"
+    assert 0 < mid < n, "the stop must find results landed and work in flight"
 
     # ---- second life: same root (checkpoints + topics + svc offsets) -----
     with topology.start_topology(

@@ -3,9 +3,9 @@ JSON-lines files, wait for its results, and compare them with the
 in-process batch pipeline on the same tweets."""
 
 import contextlib
+import itertools
 import json
 import threading
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,36 +60,27 @@ def wait_results(run, n, timeout_s):
 
 
 @contextlib.contextmanager
-def nel_held():
-    """Hold the NEL service of the topologies started inside. Every tweet
-    needs a NEL answer to complete, so no result can land and a stop always
-    finds work in flight, instead of racing completion. A held call goes on
-    once its simulator is told to stop, which ``TopologyRun.stop()`` does
-    after every query has stopped, so its answers land while the topology
-    is down. Yields an Event set on the first held request."""
-    asked = threading.Event()
+def ner_held_after_first():
+    """Answer the first NER request of the topologies started inside and
+    hold every later one. Every tweet needs a NER answer to complete, and
+    the first request carries only the tweets of Q1's first epoch (one
+    input file under ``maxFilesPerTrigger=1``, one request file with one
+    envelope), so those results can land while the rest of the stream
+    stays in flight: a stop after the first result never races
+    completion. A held call goes on once its simulator is told to stop,
+    which ``TopologyRun.stop()`` does after every query has stopped, so
+    its answers land while the topology is down."""
+    calls = itertools.count()
 
     def held(items):
-        asked.set()
-        threading.current_thread()._halt.wait()  # the simulator's stop flag
-        return transport.nel_service(items)
+        if next(calls):
+            threading.current_thread()._halt.wait()  # the simulator's stop flag
+        return transport.ner_service(items)
 
     with pytest.MonkeyPatch.context() as mp:
         # start_topology looks the service up when it builds its simulators
-        mp.setattr(topology, "nel_service", held)
-        yield asked
-
-
-def wait_held(run, asked, timeout_s):
-    """Wait until the held NEL service got its first request, failing at
-    once on a dead query or simulator and with the topology's state on a
-    timeout."""
-    deadline = time.time() + timeout_s
-    while not asked.wait(0.5):
-        run.check()
-        assert time.time() < deadline, (
-            f"NEL got no request within {timeout_s} s:\n{run.describe()}"
-        )
+        mp.setattr(topology, "ner_service", held)
+        yield
 
 
 def assert_matches_batch(results, batch):
